@@ -160,7 +160,7 @@ def cmd_collapse(argv: list[str]) -> None:
     import tempfile
 
     from pyspark.sql import Window
-    from datacollector_spark.operators.collapse import lww_collapse, packed_order
+    from datacollector_spark.operators.collapse import packed_order
     from datacollector_spark.operators.transforms import transcript_transforms
     from datacollector_spark.sources.generator import (
         ChangelogSpec,
@@ -191,9 +191,6 @@ def cmd_collapse(argv: list[str]) -> None:
     keys = ["conv_id", "turn_idx"]
     carries = [c for c in raw.columns if c not in keys]
 
-    def v_joinback():
-        return lww_collapse(raw, strategy="joinback")
-
     def v_joinback_distinct():
         packed = packed_order(F.col("lsn"), F.col("seq_in_tx"))
         winners = (
@@ -220,14 +217,9 @@ def cmd_collapse(argv: list[str]) -> None:
             .select(*keys, *carries)
         )
 
-    def v_max_by():
-        return lww_collapse(raw, strategy="max_by")
-
     variants = [
-        ("joinback", v_joinback),
         ("joinback_distinct", v_joinback_distinct),
         ("window", v_window),
-        ("max_by", v_max_by),
     ]
     out = {name: {"samples": []} for name, _ in variants}
     # round-robin reps so host noise decorrelates from variant identity

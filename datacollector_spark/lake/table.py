@@ -45,10 +45,11 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import time
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -407,16 +408,17 @@ class LakeTable:
         cross-batch LWW guard (s.lsn > t._lsn) is enforced at the join in
         COW mode and at read-time winner selection in MOR mode.
         """
-        import os as _os, time as _time
-        _dbg = _os.environ.get("DCS_MERGE_DEBUG") == "1"
-        _t = _time.time()
-        _timings: dict[str, float] = {}
-        def _mark(label):
-            nonlocal _t
-            _timings[label] = round(_time.time() - _t, 3)
-            if _dbg:
-                print(f"[merge-debug] {label}: {_timings[label]:.2f}s", flush=True)
-            _t = _time.time()
+        if mode not in ("cow", "mor"):
+            raise ValueError(f"merge mode must be 'cow' or 'mor', got {mode!r}")
+        t = time.time()
+        timings: dict[str, float] = {}
+
+        def mark(label: str) -> None:
+            nonlocal t
+            now = time.time()
+            timings[label] = round(now - t, 3)
+            t = now
+
         if commit_key is not None and self.committed(commit_key):
             return MergeResult(
                 version=self.version, commit_key=commit_key, noop=True
@@ -498,11 +500,10 @@ class LakeTable:
                 F.count(F.lit(1)).alias("rows"),
                 F.min("lsn").alias("min_lsn"),
                 F.max("lsn").alias("max_lsn"),
-                F.sum(F.when(F.col("op") == OP_DELETE, 1).otherwise(0)).alias("dels"),
             )
             .collect()
         )
-        _mark("stats_job")
+        mark("stats_job")
         touched = [int(r[_BUCKET_COL]) for r in stats_rows]
         bucket_stats = [
             {
@@ -517,77 +518,17 @@ class LakeTable:
             s.unpersist()
             return MergeResult(version=self.version, commit_key=commit_key, noop=True)
 
-        n_deletes = sum(int(r["dels"]) for r in stats_rows)
-
-        if mode == "mor":
-            # append the batch as base-shaped delta rows; no target read
-            is_del = F.col("op") == OP_DELETE
-            result = s.select(
-                F.col(_BUCKET_COL),
-                *[F.col(k) for k in keys],
-                *[
-                    F.when(is_del, F.lit(None)).otherwise(F.col(c)).alias(c)
-                    for c in non_key_cols
-                ],
-                F.col("_ord").alias(LSN_COLUMN),
-                is_del.alias(DELETED_COLUMN),
-            )
-            new_version = self.version + 1
-            out_dir_rel = os.path.join("data", f"v{new_version}")
-            out_dir = os.path.join(self.path, out_dir_rel)
-            # s is bucket-partitioned in the cache; append deltas directly
-            (
-                result.write.partitionBy(_BUCKET_COL)
-                .mode("overwrite")
-                .parquet(out_dir)
-            )
-            _mark("write_job")
-            s.unpersist()
-            new_files = self._scan_written(out_dir, out_dir_rel)
-            deltas = {k: list(v) for k, v in self._manifest.get("deltas", {}).items()}
-            for b, rels in new_files.items():
-                deltas[b] = deltas.get(b, []) + rels
-            res = MergeResult(
-                version=new_version,
-                commit_key=commit_key,
-                mode="mor",
-                rows_source=sum(b_["rows_source"] for b_ in bucket_stats),
-                rows_inserted=sum(b_["rows_source"] for b_ in bucket_stats)
-                - n_deletes,  # upserts: insert/update resolved at read
-                rows_deleted=n_deletes,
-                buckets_touched=len(touched),
-                max_lsn=max(b_["max_lsn"] for b_ in bucket_stats),
-                evolved_columns=evolved,
-                bucket_stats=bucket_stats,
-                phase_timings=_timings,
-            )
-            manifest = dict(self._manifest)
-            manifest["version"] = new_version
-            manifest["deltas"] = deltas
-            keys, hw = self._commit_bookkeeping(commit_key)
-            manifest["committed_keys"], manifest["committed_hw"] = keys, hw
-            manifest["lineage"] = (list(self._manifest["lineage"]) + [res.as_dict()])[
-                -_LINEAGE_KEEP:
-            ]
-            self._write_manifest(self.path, manifest)
-            self._manifest = manifest
-            _mark("manifest")
-            return res
-
-        target_files = self._files_for(self._manifest, touched) + self._files_for(
-            self._manifest, touched, "deltas"
+        has_target = mode == "cow" and bool(
+            self._files_for(self._manifest, touched)
+            + self._files_for(self._manifest, touched, "deltas")
         )
-        # read() folds pending MOR deltas into the view, so a COW merge over
-        # delta-carrying buckets doubles as their compaction
-        target = self.read(buckets=touched, include_meta=True).withColumn(
-            _BUCKET_COL, self.bucket_expr(*keys)
-        )
-
-        if not target_files:
-            # Fast path (no join): none of the touched buckets has data yet,
-            # so every source row lands directly — live rows for op!=2,
+        if not has_target:
+            # No join: MOR appends the batch as delta rows, and a COW merge
+            # whose touched buckets hold no data yet lands it as their base.
+            # Every source row lands directly — live rows for op!=2,
             # tombstones for op=2 (tombstones still matter: they carry the
             # LSN high-water mark against later out-of-order stale inserts).
+            # In MOR, insert vs update is resolved at read time.
             is_del = F.col("op") == OP_DELETE
             result = s.select(
                 F.when(is_del, F.lit("delete")).otherwise(F.lit("insert")).alias(
@@ -603,6 +544,11 @@ class LakeTable:
                 is_del.alias(DELETED_COLUMN),
             )
         else:
+            # read() folds pending MOR deltas into the view, so a COW merge
+            # over delta-carrying buckets doubles as their compaction
+            target = self.read(buckets=touched, include_meta=True).withColumn(
+                _BUCKET_COL, self.bucket_expr(*keys)
+            )
             s_pref = s.select(
                 *[F.col(k).alias(f"s_{k}") for k in keys],
                 F.col(_BUCKET_COL).alias("s__bucket"),
@@ -679,8 +625,6 @@ class LakeTable:
                 *out_cols,
             )
 
-        from pyspark.sql import Observation
-
         obs = Observation(f"merge-{uuid.uuid4().hex[:8]}")
         result = result.observe(
             obs,
@@ -689,34 +633,19 @@ class LakeTable:
             F.sum(F.when(F.col("_action") == "delete", 1).otherwise(0)).alias("del"),
             F.sum(F.when(F.col("_action") == "stale", 1).otherwise(0)).alias("stale"),
         )
-
-        new_version = self.version + 1
-        out_dir_rel = os.path.join("data", f"v{new_version}")
-        out_dir = os.path.join(self.path, out_dir_rel)
-        # no repartition: the join output (and the fast path's projection of
-        # s) is already hash-partitioned by the bucket, so each task holds
-        # whole buckets and partitionBy still writes one file per bucket
-        (
-            result.drop("_action")
-            .write.partitionBy(_BUCKET_COL)
-            .mode("overwrite")
-            .parquet(out_dir)
-        )
-        _mark("write_job")
+        # no repartition: the join output (and the projection of s) is
+        # already hash-partitioned by the bucket, so each task holds whole
+        # buckets and partitionBy still writes one file per bucket
+        new_version, new_files = self._write_version(result.drop("_action"))
+        mark("write_job")
         m = obs.get
-        _mark("obs_get")
+        mark("obs_get")
         s.unpersist()
-
-        new_files = self._scan_written(out_dir, out_dir_rel)
-        files = dict(self._manifest["files"])
-        deltas = {k: list(v) for k, v in self._manifest.get("deltas", {}).items()}
-        for b in touched:
-            files[str(b)] = new_files.get(str(b), [])
-            deltas.pop(str(b), None)  # folded into the new base files
 
         res = MergeResult(
             version=new_version,
             commit_key=commit_key,
+            mode=mode,
             rows_source=sum(b["rows_source"] for b in bucket_stats),
             rows_inserted=int(m["ins"] or 0),
             rows_updated=int(m["upd"] or 0),
@@ -726,78 +655,104 @@ class LakeTable:
             max_lsn=max(b["max_lsn"] for b in bucket_stats),
             evolved_columns=evolved,
             bucket_stats=bucket_stats,
-            phase_timings=_timings,
+            phase_timings=timings,
         )
-        manifest = dict(self._manifest)
-        manifest["version"] = new_version
-        manifest["files"] = files
-        manifest["deltas"] = deltas
-        keys, hw = self._commit_bookkeeping(commit_key)
-        manifest["committed_keys"], manifest["committed_hw"] = keys, hw
-        manifest["lineage"] = (list(self._manifest["lineage"]) + [res.as_dict()])[
-            -_LINEAGE_KEEP:
-        ]
-        self._write_manifest(self.path, manifest)
-        self._manifest = manifest
-        _mark("manifest")
+        self._commit(new_version, new_files, touched, as_deltas=mode == "mor", res=res)
+        mark("manifest")
         return res
 
-    @staticmethod
-    def _scan_written(out_dir: str, out_dir_rel: str) -> dict[str, list[str]]:
-        """Collect {bucket: [relpaths]} from a partitionBy(_bucket) write."""
+    # ---------------------------------------------------------------- commit
+    def _write_version(self, df: DataFrame) -> tuple[int, dict[str, list[str]]]:
+        """Write ``df`` (carrying ``_bucket``) as the next version's data
+        files, one directory per bucket. Returns the new version and the
+        files written as {bucket: [relpaths]}."""
+        new_version = self.version + 1
+        out_dir_rel = os.path.join("data", f"v{new_version}")
+        out_dir = os.path.join(self.path, out_dir_rel)
+        df.write.partitionBy(_BUCKET_COL).mode("overwrite").parquet(out_dir)
         new_files: dict[str, list[str]] = {}
         for entry in os.listdir(out_dir):
             if not entry.startswith(f"{_BUCKET_COL}="):
                 continue
-            b = entry.split("=", 1)[1]
-            bdir = os.path.join(out_dir, entry)
             rels = [
                 os.path.join(out_dir_rel, entry, fn)
-                for fn in os.listdir(bdir)
+                for fn in os.listdir(os.path.join(out_dir, entry))
                 if fn.endswith(".parquet")
             ]
             if rels:
-                new_files[b] = rels
-        return new_files
+                new_files[entry.split("=", 1)[1]] = rels
+        return new_version, new_files
+
+    def _commit(
+        self,
+        new_version: int,
+        new_files: dict[str, list[str]],
+        buckets: list[int],
+        as_deltas: bool,
+        res: MergeResult | None = None,
+    ) -> None:
+        """Flip the manifest to ``new_version``. The new files either replace
+        the base files of ``buckets`` and drop their deltas (COW merge,
+        compaction) or are appended as their deltas (MOR merge). A merge
+        also records its commit key and lineage."""
+        files = dict(self._manifest["files"])
+        deltas = {k: list(v) for k, v in self._manifest.get("deltas", {}).items()}
+        for b in map(str, buckets):
+            if as_deltas:
+                deltas[b] = deltas.get(b, []) + new_files.get(b, [])
+            else:
+                files[b] = new_files.get(b, [])
+                deltas.pop(b, None)
+        manifest = dict(self._manifest, version=new_version, files=files, deltas=deltas)
+        if res is not None:
+            keys, hw = self._commit_bookkeeping(res.commit_key)
+            manifest["committed_keys"], manifest["committed_hw"] = keys, hw
+            manifest["lineage"] = (list(self._manifest["lineage"]) + [res.as_dict()])[
+                -_LINEAGE_KEEP:
+            ]
+        self._write_manifest(self.path, manifest)
+        self._manifest = manifest
+
+    def _rewrite_buckets(self, buckets: list[int]) -> int:
+        """Rewrite ``buckets`` as base files holding their current snapshot
+        (read() folds pending deltas in). Returns the number rewritten."""
+        if not buckets:
+            return 0
+        df = self.read(buckets=buckets, include_meta=True).withColumn(
+            _BUCKET_COL, self.bucket_expr(*self.key_columns)
+        )
+        new_version, new_files = self._write_version(
+            df.repartition(len(buckets), F.col(_BUCKET_COL))
+        )
+        self._commit(new_version, new_files, buckets, as_deltas=False)
+        return len(buckets)
 
     def compact_deltas(self, buckets: list[int] | None = None) -> int:
         """Fold MOR delta files into base files (Iceberg rewrite of v2
         deletes / Hudi compaction). Returns the number of buckets compacted.
         The read-side collapse does the heavy lifting; this just persists
         its result as the new base."""
-        delta_buckets = [
-            int(b) for b, rels in self._manifest.get("deltas", {}).items() if rels
-        ]
-        if buckets is not None:
-            delta_buckets = [b for b in delta_buckets if b in buckets]
-        if not delta_buckets:
-            return 0
-        keys = self.key_columns
-        collapsed = self.read(buckets=delta_buckets, include_meta=True).withColumn(
-            _BUCKET_COL, self.bucket_expr(*keys)
+        return self._rewrite_buckets(
+            [
+                int(b)
+                for b, rels in self._manifest.get("deltas", {}).items()
+                if rels and (buckets is None or int(b) in buckets)
+            ]
         )
-        new_version = self.version + 1
-        out_dir_rel = os.path.join("data", f"v{new_version}")
-        out_dir = os.path.join(self.path, out_dir_rel)
-        (
-            collapsed.repartition(max(len(delta_buckets), 1), F.col(_BUCKET_COL))
-            .write.partitionBy(_BUCKET_COL)
-            .mode("overwrite")
-            .parquet(out_dir)
+
+    def compact(self, max_files_per_bucket: int = 1) -> int:
+        """Rewrite buckets whose base file count exceeds the threshold —
+        Iceberg's rewrite_data_files; the reference analog is the MapReduce
+        Avro→Parquet converter executor (SURVEY.md §2.5). Pending deltas of
+        a rewritten bucket are folded in. Returns the number of buckets
+        rewritten."""
+        return self._rewrite_buckets(
+            [
+                int(b)
+                for b, rels in self._manifest["files"].items()
+                if len(rels) > max_files_per_bucket
+            ]
         )
-        new_files = self._scan_written(out_dir, out_dir_rel)
-        files = dict(self._manifest["files"])
-        deltas = {k: list(v) for k, v in self._manifest.get("deltas", {}).items()}
-        for b in delta_buckets:
-            files[str(b)] = new_files.get(str(b), [])
-            deltas.pop(str(b), None)
-        manifest = dict(self._manifest)
-        manifest["version"] = new_version
-        manifest["files"] = files
-        manifest["deltas"] = deltas
-        self._write_manifest(self.path, manifest)
-        self._manifest = manifest
-        return len(delta_buckets)
 
     # ------------------------------------------------------------- maintain
     def expire_snapshots(self, keep_last: int = 2) -> int:
@@ -810,6 +765,10 @@ class LakeTable:
         long-running stream MUST expire periodically or storage grows with
         versions, not data (CdcIngestPipeline.expire_keep automates this).
         """
+        if keep_last < 1:
+            # keep_last=0 would keep no snapshot, not even the current one,
+            # and delete every data file the table still points at
+            raise ValueError(f"keep_last must be >= 1, got {keep_last}")
         current = self.version
         cutoff = max(current - keep_last + 1, 0)
         keep_versions = list(range(cutoff, current + 1))
@@ -839,46 +798,3 @@ class LakeTable:
                 if v < cutoff:
                     os.remove(os.path.join(mdir, fn))
         return deleted
-
-    def compact(self, max_files_per_bucket: int = 1) -> int:
-        """Rewrite buckets whose file count exceeds the threshold — Iceberg's
-        rewrite_data_files; the reference analog is the MapReduce
-        Avro→Parquet converter executor (SURVEY.md §2.5). Returns the number
-        of buckets rewritten."""
-        victims = [
-            int(b)
-            for b, rels in self._manifest["files"].items()
-            if len(rels) > max_files_per_bucket
-        ]
-        if not victims:
-            return 0
-        schema = self.schema
-        df = self.spark.read.schema(schema).parquet(
-            *self._files_for(self._manifest, victims)
-        ).withColumn(_BUCKET_COL, self.bucket_expr(*self.key_columns))
-        new_version = self.version + 1
-        out_dir_rel = os.path.join("data", f"v{new_version}")
-        out_dir = os.path.join(self.path, out_dir_rel)
-        (
-            df.repartition(len(victims), F.col(_BUCKET_COL))
-            .write.partitionBy(_BUCKET_COL)
-            .mode("overwrite")
-            .parquet(out_dir)
-        )
-        files = dict(self._manifest["files"])
-        for entry in os.listdir(out_dir):
-            if not entry.startswith(f"{_BUCKET_COL}="):
-                continue
-            b = entry.split("=", 1)[1]
-            bdir = os.path.join(out_dir, entry)
-            files[b] = [
-                os.path.join(out_dir_rel, entry, fn)
-                for fn in os.listdir(bdir)
-                if fn.endswith(".parquet")
-            ]
-        manifest = dict(self._manifest)
-        manifest["version"] = new_version
-        manifest["files"] = files
-        self._write_manifest(self.path, manifest)
-        self._manifest = manifest
-        return len(victims)

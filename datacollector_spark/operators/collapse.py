@@ -7,39 +7,28 @@ The distributed generalization of two reference behaviors:
     (mysql-binlog-lib/.../BinaryLogConsumer.java:148-155) — at-least-once
     delivery collapsed to effectively-once per key.
 
-Three physical strategies, same semantics (winner = max (lsn, seq_in_tx) per
+Two physical strategies, same semantics (winner = max (lsn, seq_in_tx) per
 key; exact duplicates collapse to one row):
 
-* ``window`` (default, round 6): ONE pass — row_number() over
-  (partition keys, order packed DESC), keep rank 1. Spark 3.5+/4.x plans
-  the ``_rn = 1`` filter as a map-side WindowGroupLimit BEFORE the
-  exchange (verified in plans/r06/), so each map partition forwards at
-  most one row per key: the shuffle carries ~winners, exactly like the
-  joinback's partial aggregation, but with a single scan of the batch, no
-  broadcast build, and no second full-width aggregate for duplicate
-  removal. The output exchange is hash(keys), which the downstream lake
-  MERGE join reuses (guide §2.4: two operations keyed the same way share
-  one exchange). Measured on the bench micro-batch shape (2M x 512B rows,
-  ~7 rows/key, local[32]): 2.90 s vs 3.60 s for joinback (min-of-3,
-  noop sink). Null keys group together (matching SQL PARTITION BY
-  semantics; the join form silently dropped them) — key columns are
-  non-null by pipeline contract either way.
+* ``window`` (default): ONE pass — row_number() over (partition keys,
+  order packed DESC), keep rank 1. Spark 3.5+/4.x plans the ``_rn = 1``
+  filter as a map-side WindowGroupLimit BEFORE the exchange (verified in
+  plans/r06/), so each map partition forwards at most one row per key: the
+  shuffle carries ~winners from a single scan of the batch. The output
+  exchange is hash(keys), which the downstream lake MERGE join reuses
+  (guide §2.4: two operations keyed the same way share one exchange).
+  Measured on the bench micro-batch shape (2M x 512B rows, ~7 rows/key,
+  local[32]): 2.90 s vs 3.60 s for a winners-aggregate + join-back
+  (min-of-3, noop sink). Null keys group together (matching SQL PARTITION
+  BY semantics) — key columns are non-null by pipeline contract either way.
 
-* ``joinback``: a fixed-width HashAggregate computes the winning
-  packed order per key (map-side combined, whole-stage codegen), then a
-  join filters the batch to winner rows and a dropDuplicates collapses
-  exact-duplicate deliveries. Catalyst broadcasts the winners side when it
-  is small and degrades to a shuffled join for huge batches. Kept for
-  shapes where the batch is read from a source whose scan is cheaper than
-  a full-width exchange AND the duplicate-removal aggregate is small
-  (very high update-per-key ratios).
-
-* ``max_by``: single-pass groupBy(keys).agg(max_by(payload, order)).
-  Spark executes non-fixed-width aggregation buffers as SortAggregate
-  (partial+final, still map-side combined — shuffle volume = distinct keys,
-  at the price of a map-side sort). Used automatically for the salted
-  two-phase variant (north rule: salted repartitioning for adversarially
-  hot keys).
+* salted two-phase ``max_by`` (``salt_buckets`` > 1): groupBy(keys, salt)
+  then groupBy(keys), each .agg(max_by(payload, order)). Spark executes
+  non-fixed-width aggregation buffers as SortAggregate (partial+final,
+  still map-side combined — shuffle volume = distinct keys, at the price of
+  a map-side sort); the salt splits an adversarially hot key across
+  reducers in the first phase (north rule: salted repartitioning for hot
+  keys).
 
 Order packing: packed = lsn * 2^16 + seq_in_tx. Contract: 0 <= lsn < 2^47
 and 0 <= seq_in_tx < 2^16 (seq is masked defensively) — the generator and
@@ -87,12 +76,11 @@ def lww_collapse(
     order_columns: tuple[str, str] = ("lsn", "seq_in_tx"),
     carry_columns: list[str] | None = None,
     salt_buckets: int | None = None,
-    strategy: str = "window",
 ) -> DataFrame:
     """Collapse to one row per key: the row with the max (lsn, seq_in_tx).
 
     ``carry_columns`` — columns to carry through (defaults to every non-key
-    column). ``salt_buckets`` forces the two-phase salted max_by path.
+    column). ``salt_buckets`` > 1 selects the two-phase salted max_by path.
     """
     keys = key_columns or KEY_COLUMNS
     carries = carry_columns or [c for c in df.columns if c not in keys]
@@ -101,10 +89,7 @@ def lww_collapse(
         if oc not in carries:
             carries = carries + [oc]
 
-    if salt_buckets and salt_buckets > 1:
-        strategy = "max_by"
-
-    if strategy == "window":
+    if not salt_buckets or salt_buckets <= 1:
         from pyspark.sql import Window
 
         w = Window.partitionBy(*keys).orderBy(F.col("_pk").desc())
@@ -115,38 +100,15 @@ def lww_collapse(
             .select(*keys, *carries)
         )
 
-    if strategy == "joinback":
-        packed = _packed_order(lsn_col, seq_col)
-        winners = (
-            df.select(*keys, packed.alias("_pk"))
-            .groupBy(*keys)
-            .agg(F.max("_pk").alias("_win"))
-        )
-        out = (
-            df.withColumn("_pk", packed)
-            .join(winners, on=keys)
-            .where(F.col("_pk") == F.col("_win"))
-            # exact duplicate deliveries share (lsn, seq): identical rows,
-            # keep one
-            .dropDuplicates(keys)
-            .select(*keys, *carries)
-        )
-        return out
-
-    # ---- max_by path (optionally salted two-phase)
+    # ---- salted two-phase max_by
     payload = F.struct(*[F.col(c) for c in carries])
     order = F.struct(F.col(lsn_col), F.col(seq_col))
-
-    if salt_buckets and salt_buckets > 1:
-        salt = F.pmod(F.xxhash64(F.col(lsn_col), F.col(seq_col)), F.lit(salt_buckets))
-        df = (
-            df.groupBy(*keys, salt.alias("_salt"))
-            .agg(F.max_by(payload, order).alias("_p"))
-            .select(*keys, "_p.*")
-        )
-
+    salt = F.pmod(F.xxhash64(F.col(lsn_col), F.col(seq_col)), F.lit(salt_buckets))
     return (
-        df.groupBy(*keys)
-        .agg(F.max_by(payload, F.struct(F.col(lsn_col), F.col(seq_col))).alias("_p"))
+        df.groupBy(*keys, salt.alias("_salt"))
+        .agg(F.max_by(payload, order).alias("_p"))
+        .select(*keys, "_p.*")
+        .groupBy(*keys)
+        .agg(F.max_by(payload, order).alias("_p"))
         .select(*keys, "_p.*")
     )

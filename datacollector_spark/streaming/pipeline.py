@@ -246,35 +246,17 @@ class CdcIngestPipeline:
         # per flush (measured 5.9 s at the end of a 28 s ingest run — guide
         # §5: the driver should do almost no data work, and conversely tiny
         # metadata should not be pushed through the cluster machinery).
-        # Schema (incl. the map<string,double> phase timings) matches
-        # LINEAGE_SCHEMA bit-for-bit, so Spark reads the directory unchanged.
+        # The Arrow schema is derived from LINEAGE_SCHEMA (incl. the
+        # map<string,double> phase timings), so Spark reads the directory
+        # back with exactly that schema.
         import uuid as _uuid
 
         import pyarrow as _pa
         import pyarrow.parquet as _pq
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         buf = self._lineage_buffer
-        arrow_schema = _pa.schema(
-            [
-                _pa.field("batch_id", _pa.int64()),
-                _pa.field("commit_key", _pa.string()),
-                _pa.field("table_version", _pa.int64()),
-                _pa.field("bucket", _pa.int32()),
-                _pa.field("rows_source", _pa.int64()),
-                _pa.field("min_lsn", _pa.int64()),
-                _pa.field("max_lsn", _pa.int64()),
-                _pa.field("rows_inserted", _pa.int64()),
-                _pa.field("rows_updated", _pa.int64()),
-                _pa.field("rows_deleted", _pa.int64()),
-                _pa.field("rows_lww_skipped", _pa.int64()),
-                _pa.field("noop", _pa.bool_()),
-                _pa.field("evolved_columns", _pa.list_(_pa.string())),
-                _pa.field("wall_s", _pa.float64()),
-                _pa.field(
-                    "phase_timings", _pa.map_(_pa.string(), _pa.float64())
-                ),
-            ]
-        )
+        arrow_schema = to_arrow_schema(LINEAGE_SCHEMA)
         cols = []
         for f in arrow_schema:
             vals = [r.get(f.name) for r in buf]

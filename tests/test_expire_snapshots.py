@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pandas.testing import assert_frame_equal
 from pyspark.sql import functions as F
 
@@ -44,3 +45,26 @@ def test_expire_snapshots_keeps_state(spark, tmp_path):
     # current snapshot still loadable from a fresh handle
     fresh = LakeTable(spark, str(tmp_path / "t"))
     assert fresh.version == table.version
+
+
+def test_expire_snapshots_rejects_keep_last_below_one(spark, tmp_path):
+    """keep_last=0 would keep no snapshot at all and delete the files the
+    current version still points at; it must raise and touch nothing."""
+    df = generate_changelog(
+        spark, ChangelogSpec(n_events=600, n_conversations=20, seed=6)
+    ).drop("delivery_pos")
+    table = LakeTable.create(
+        spark, str(tmp_path / "t"), transcripts_schema(), KEY_COLUMNS, num_buckets=4
+    )
+    table.merge(lww_collapse(df), commit_key="b0")
+    files_before = _parquet_count(str(tmp_path / "t"))
+    before = table.read().orderBy(*KEY_COLUMNS).toPandas()
+
+    for keep_last in (0, -1):
+        with pytest.raises(ValueError, match="keep_last"):
+            table.expire_snapshots(keep_last=keep_last)
+    assert _parquet_count(str(tmp_path / "t")) == files_before
+    fresh = LakeTable(spark, str(tmp_path / "t"))
+    assert_frame_equal(
+        before, fresh.read().orderBy(*KEY_COLUMNS).toPandas(), check_dtype=False
+    )

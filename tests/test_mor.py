@@ -51,8 +51,24 @@ def test_mor_multibatch_matches_oracle(spark, data, tmp_path):
     for i, b in enumerate(_batches(df, 4)):
         res = table.merge(lww_collapse(b), commit_key=f"b{i}", mode="mor")
         assert res.mode == "mor"
+        # MOR resolves insert vs update at read time: every non-delete row
+        # counts as an insert, and nothing is judged stale at write time
+        assert res.rows_inserted + res.rows_deleted == res.rows_source
+        assert res.rows_updated == res.rows_lww_skipped == 0
     assert table.delta_file_count() > 0
     assert_frame_equal(_final(table), oracle, check_dtype=False)
+
+
+def test_merge_rejects_unknown_mode(spark, data, tmp_path):
+    df, _ = data
+    table = LakeTable.create(
+        spark, str(tmp_path / "t"), transcripts_schema(), KEY_COLUMNS, num_buckets=8
+    )
+    batch = lww_collapse(next(iter(_batches(df, 4))))
+    for mode in ("MOR", "merge-on-read", ""):
+        with pytest.raises(ValueError, match="mode"):
+            table.merge(batch, commit_key="b0", mode=mode)
+    assert table.version == 0 and not table.committed("b0")
 
 
 def test_mor_compaction_preserves_state(spark, data, tmp_path):

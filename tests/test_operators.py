@@ -200,19 +200,23 @@ def test_compaction_reduces_files(spark, tmp_path):
     from datacollector_spark.operators.collapse import lww_collapse
     from datacollector_spark.sources.generator import ChangelogSpec, generate_changelog
 
-    spec = ChangelogSpec(n_events=2_000, n_conversations=40, seed=3)
+    spec = ChangelogSpec(n_events=2_600, n_conversations=40, seed=3)
     df = generate_changelog(spark, spec).drop("delivery_pos")
     table = LakeTable.create(
         spark, str(tmp_path / "t"), transcripts_schema(), KEY_COLUMNS, num_buckets=4
     )
-    for lo, hi in [(0, 700), (700, 1400), (1400, 2_000)]:
+    # the last batch lands as MOR deltas, which the rewrite must fold in
+    batches = [(0, 700, "cow"), (700, 1400, "cow"), (1400, 2_000, "cow"), (2_000, 2_600, "mor")]
+    for lo, hi, mode in batches:
         batch = df.where((F.col("lsn") >= lo) & (F.col("lsn") < hi))
-        table.merge(lww_collapse(batch), commit_key=f"b{lo}")
+        table.merge(lww_collapse(batch), commit_key=f"b{lo}", mode=mode)
+    assert table.delta_file_count() > 0
     before = table.read().orderBy("conv_id", "turn_idx").toPandas()
     # bucket-COW merges leave exactly one file per bucket, so threshold 1 is
     # a no-op; threshold 0 forces a full rewrite and must preserve state
     assert table.compact(max_files_per_bucket=1) == 0
     assert table.compact(max_files_per_bucket=0) > 0
+    assert table.delta_file_count() == 0
     after = table.read().orderBy("conv_id", "turn_idx").toPandas()
     import pandas.testing as pdt
 

@@ -23,6 +23,7 @@ from datacollector_spark.sources.generator import (
     write_segments,
 )
 from datacollector_spark.streaming import CdcIngestPipeline
+from datacollector_spark.streaming.pipeline import LINEAGE_SCHEMA
 
 
 def _final(table: LakeTable, cols=None) -> pd.DataFrame:
@@ -61,6 +62,7 @@ def test_available_now_drain_matches_oracle(spark, seg_data, tmp_path):
     assert_frame_equal(_final(table.refresh()), oracle, check_dtype=False)
     # lineage written: batch rows + per-bucket rows
     lin = spark.read.parquet(str(tmp_path / "lineage"))
+    assert lin.schema == LINEAGE_SCHEMA
     assert lin.where(F.col("bucket").isNull()).count() == pipe.batches_applied
     assert lin.where(F.col("bucket").isNotNull()).count() > 0
     total_src = (

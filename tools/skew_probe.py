@@ -4,10 +4,10 @@ Generates a changelog where one conversation receives ``HOT_FRAC`` of all
 events (a pathological hot key — the north rule's "salted repartitioning
 for hot keys" scenario), then times lww_collapse's strategies:
 
-  * joinback (default): HashAggregate winners + join-back. The winners
-    aggregate is per (conv_id, turn_idx) — the hot conversation still
-    splits across turn_idx, and the map-side combine absorbs duplicates
-    before the shuffle, so skew mostly vanishes in the partial aggregate.
+  * window (default): rank-1 row_number per (conv_id, turn_idx). The hot
+    conversation still splits across turn_idx, and the map-side
+    WindowGroupLimit drops duplicates before the shuffle, so skew mostly
+    vanishes before the exchange.
   * salted max_by: two-phase (key+salt, then key) — the belt-and-braces
     path for keys so hot a single reducer would still choke.
 
@@ -54,20 +54,20 @@ def main() -> None:
             best = min(best, time.time() - t0)
         return round(best, 2)
 
-    joinback = lww_collapse(skewed)
+    window = lww_collapse(skewed)
     salted = lww_collapse(skewed, salt_buckets=16)
-    w_join = timeit(joinback)
+    w_window = timeit(window)
     w_salt = timeit(salted)
-    rows_a = joinback.count()
+    rows_a = window.count()
     rows_b = salted.count()
     print(
         json.dumps(
             {
                 "events": n,
                 "hot_frac": hot_frac,
-                "joinback_wall_s": w_join,
+                "window_wall_s": w_window,
                 "salted_wall_s": w_salt,
-                "rows_joinback": rows_a,
+                "rows_window": rows_a,
                 "rows_salted": rows_b,
                 "equal_rows": rows_a == rows_b,
             }
