@@ -131,8 +131,6 @@ def _run_leg(spark, segments_dir: str, cores: int) -> dict:
         transforms=transcript_transforms,
         lineage_dir=lineage_dir,
         max_files_per_trigger=max(N_SEGMENTS // BATCHES, 1),
-        per_bucket_lineage=True,
-        lineage_flush_rows=1_000_000,
         expire_keep=2,  # COW storage hygiene: old snapshots expire per batch
     )
     # Warmup OUTSIDE the timed window: a miniature end-to-end run through

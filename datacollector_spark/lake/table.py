@@ -53,7 +53,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datacollector_spark.model import LSN_COLUMN, OP_DELETE
+from datacollector_spark.model import LSN_COLUMN, OP_DELETE, payload_columns_of
 
 _BUCKET_COL = "_bucket"
 DELETED_COLUMN = "_deleted"
@@ -426,13 +426,8 @@ class LakeTable:
 
         evolved: list[str] = []
         if evolve:
-            envelope = {"op", "lsn", "seq_in_tx", "src_table", "server_id", "commit_ts"}
             payload_schema = T.StructType(
-                [
-                    f
-                    for f in source.schema.fields
-                    if f.name not in envelope and not f.name.startswith("old_")
-                ]
+                [source.schema[c] for c in payload_columns_of(source.schema)]
             )
             evolved = self.evolve_schema(payload_schema)
 

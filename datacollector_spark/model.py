@@ -26,6 +26,10 @@ OP_UNSUPPORTED = 5
 # Columns of the payload row (input_hint: the transcripts table)
 PAYLOAD_COLUMNS: list[str] = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 KEY_COLUMNS: list[str] = ["conv_id", "turn_idx"]
+# Change-event envelope: op code, total order, source coordinates
+ENVELOPE_COLUMNS: tuple[str, ...] = (
+    "op", "lsn", "seq_in_tx", "src_table", "server_id", "commit_ts"
+)
 
 # Engine-maintained column on the target table: LSN of the last applied
 # change. This is the MERGE idempotency guard (the reference's GTID
@@ -84,9 +88,8 @@ def changelog_schema(extra_fields: list[T.StructField] | None = None) -> T.Struc
 def payload_columns_of(schema: T.StructType) -> list[str]:
     """Payload (after-image) columns present in a changelog schema — i.e.
     everything that is not envelope or before-image."""
-    envelope = {"op", "lsn", "seq_in_tx", "src_table", "server_id", "commit_ts"}
     return [
         f.name
         for f in schema.fields
-        if f.name not in envelope and not f.name.startswith("old_")
+        if f.name not in ENVELOPE_COLUMNS and not f.name.startswith("old_")
     ]

@@ -163,6 +163,7 @@ def _connector_writer(typ: str, st: dict, src: Any):
             from pyspark.sql import functions as F
 
             from datacollector_spark.lake.table import LakeTable
+            from datacollector_spark.model import payload_columns_of
             from datacollector_spark.operators.collapse import lww_collapse
 
             df = src
@@ -184,15 +185,7 @@ def _connector_writer(typ: str, st: dict, src: Any):
             path = st["table_path"]
             spark_s = src.sparkSession
             if not _os.path.exists(_os.path.join(path, "_manifests")):
-                envelope = {
-                    "op", "lsn", "seq_in_tx", "src_table", "server_id",
-                    "commit_ts",
-                }
-                payload = [
-                    c
-                    for c in collapsed.columns
-                    if c not in envelope and not c.startswith("old_")
-                ]
+                payload = payload_columns_of(collapsed.schema)
                 LakeTable.create(
                     spark_s,
                     path,

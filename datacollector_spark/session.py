@@ -80,78 +80,4 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if os.environ.get("DCS_SESSION_WARMUP", "1") != "0":
-        _warm_session(spark)
     return spark
-
-
-_WARMED: set[str] = set()
-
-
-def _warm_session(spark: SparkSession) -> None:
-    """One-time per-context warmup of the engine's common codepaths.
-
-    A fresh JVM pays first-use costs on its first real query: task-scheduler
-    and shuffle-infra spin-up, whole-stage-codegen compiler + Janino JIT,
-    parquet reader/writer init, the noop/parquet datasource lookups, and
-    broadcast machinery. On a long-running service these constants vanish;
-    on short-lived sessions they land on whichever query runs first and
-    distort its latency. The standard fix (same reason the CDC bench legs
-    run an untimed warmup merge) is to exercise the paths once at session
-    creation. Costs ~2 s once per SparkContext; disable with
-    DCS_SESSION_WARMUP=0."""
-    app_id = spark.sparkContext.applicationId
-    if app_id in _WARMED:
-        return
-    _WARMED.add(app_id)
-    try:
-        import shutil
-        import tempfile
-
-        from pyspark.sql import functions as F
-
-        df = spark.range(1_000_000).select(
-            (F.col("id") % 1000).alias("k"), F.col("id").cast("double").alias("v")
-        )
-        # exchange + partial/final hash aggregate + noop sink
-        df.repartition(8, "k").groupBy("k").agg(F.sum("v").alias("s")).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        # window + sort + WindowGroupLimit (the LWW-collapse shape) — first
-        # use otherwise pays its codegen inside whichever query runs first
-        from pyspark.sql import Window as _W
-
-        (
-            df.withColumn(
-                "_rn",
-                F.row_number().over(_W.partitionBy("k").orderBy(F.col("v").desc())),
-            )
-            .where("_rn = 1")
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
-        )
-        # generate (explode) + object-hash aggregate (collect_list) — the
-        # bucket-expansion shape every LSH/dedup operator uses
-        (
-            df.select("k", F.explode(F.array(F.col("v"), F.col("v"))).alias("e"))
-            .groupBy("k")
-            .agg(F.collect_list("e").alias("es"))
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
-        )
-        # parquet write/read + broadcast hash join + codegen'd filter
-        d = tempfile.mkdtemp(prefix="dcs-warm-")
-        try:
-            spark.range(10_000).write.mode("overwrite").parquet(d)
-            (
-                spark.read.parquet(d)
-                .join(F.broadcast(spark.range(100)), "id")
-                .where("id % 7 != 0")
-                .count()
-            )
-        finally:
-            shutil.rmtree(d, ignore_errors=True)
-    except Exception:
-        pass  # warmup is best-effort; never fail session creation

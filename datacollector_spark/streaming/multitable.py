@@ -4,38 +4,29 @@ The reference's whole-database shape: the JDBC Multitable / binlog origins
 emit events for MANY tables in one stream (each record names its table —
 RecordConverter.java:44-56 `Table` field), and a stream-selector + N
 destinations route them (the canonical SDC multi-table pipeline). Here the
-router is one foreachBatch that splits the micro-batch by ``src_table``,
-collapses per table key, and merges each slice into its own LakeTable —
-per-table exactly-once commit keys, one shared checkpoint.
+router is one foreachBatch that splits the micro-batch by ``src_table`` and
+hands each table's slice to that table's own :class:`CdcIngestPipeline` —
+the single micro-batch apply path (collapse -> transform -> merge, lineage,
+expiry) — with per-table exactly-once commit keys and one shared checkpoint.
 
 Scale notes: the batch is persisted once and each table's slice is a
-pruned filter over it (no rescan per table); per-table merges run
+pruned filter over it (no rescan per table); per-table applies run
 sequentially inside the micro-batch (Spark parallelizes WITHIN each merge;
 cross-table thread pools buy little on a shared cluster and complicate
-failure atomicity — if merge k fails, tables 0..k-1 committed and their
+failure atomicity — if table k fails, tables 0..k-1 committed and their
 commit keys make the replay a per-table no-op).
 """
 
 from __future__ import annotations
 
-import hashlib
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datacollector_spark.lake.table import LakeTable
-from datacollector_spark.operators.collapse import lww_collapse
+from datacollector_spark.streaming.pipeline import CdcIngestPipeline
 
 
-def route_by_table(df: DataFrame, table_names: list[str]) -> dict[str, DataFrame]:
-    """{table: slice} split of a multi-table changelog (stream-selector on
-    src_table). Slices of tables not in the batch are empty frames."""
-    return {name: df.where(F.col("src_table") == name) for name in table_names}
-
-
-class MultiTableCdcPipeline:
+class MultiTableCdcPipeline(CdcIngestPipeline):
     """Tail ONE changelog stream carrying events for several tables; apply
     each table's slice to its own LakeTable exactly once.
 
@@ -44,6 +35,11 @@ class MultiTableCdcPipeline:
     lifts the generic payload into that table's typed columns (e.g.
     changelog_formats.project_transcript_payload); None keeps the batch
     columns as-is.
+
+    The router is a CdcIngestPipeline with no table of its own: it inherits
+    the stream drivers (source read, checkpoint, triggers) and replaces only
+    the batch body; table ``name``'s commit keys are
+    ``<stream>:<name>:microbatch-<N>``.
     """
 
     def __init__(
@@ -56,60 +52,34 @@ class MultiTableCdcPipeline:
         max_files_per_trigger: int | None = None,
         transforms=None,
     ):
-        self.spark = spark
-        self.source_dir = source_dir
+        super().__init__(
+            spark,
+            source_dir,
+            None,
+            checkpoint_dir,
+            source_schema,
+            max_files_per_trigger=max_files_per_trigger,
+        )
         self.table_configs = table_configs
-        self.checkpoint_dir = checkpoint_dir
-        self.source_schema = source_schema
-        self.max_files_per_trigger = max_files_per_trigger
-        self.transforms = transforms
-        self.stream_id = hashlib.sha1(
-            checkpoint_dir.rstrip("/").encode()
-        ).hexdigest()[:12]
-        self.batch_stats: list[dict] = []
-
-    def _read_stream(self) -> DataFrame:
-        reader = self.spark.readStream.schema(self.source_schema)
-        if self.max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
-        return reader.parquet(self.source_dir)
+        self.pipelines: dict[str, CdcIngestPipeline] = {}
+        for name, cfg in table_configs.items():
+            pipe = CdcIngestPipeline(
+                spark,
+                source_dir,
+                cfg["table"],
+                checkpoint_dir,
+                source_schema,
+                transforms=transforms,
+            )
+            pipe.stream_id = f"{self.stream_id}:{name}"
+            self.pipelines[name] = pipe
 
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         batch = batch_df.persist()
         try:
-            slices = route_by_table(batch, list(self.table_configs))
-            for name, sl in slices.items():
-                t0 = time.time()  # per-table wall, not cumulative micro-batch
-                cfg = self.table_configs[name]
-                table: LakeTable = cfg["table"]
-                commit_key = f"{self.stream_id}:{name}:microbatch-{batch_id}"
-                if table.committed(commit_key):
-                    continue
-                project = cfg.get("project")
-                src = project(sl) if project else sl
-                keys = table.key_columns
-                collapsed = lww_collapse(src, key_columns=keys)
-                if self.transforms is not None:
-                    collapsed = self.transforms(collapsed)
-                res = table.merge(collapsed, commit_key=commit_key)
-                self.batch_stats.append(
-                    {
-                        "batch_id": batch_id,
-                        "table": name,
-                        "rows_source": res.rows_source,
-                        "noop": res.noop,
-                        "wall_s": round(time.time() - t0, 3),
-                    }
-                )
+            for name, pipe in self.pipelines.items():
+                sl = batch.where(F.col("src_table") == name)
+                project = self.table_configs[name].get("project")
+                pipe.apply_batch(project(sl) if project else sl, batch_id)
         finally:
             batch.unpersist()
-
-    def run_available_now(self, timeout_s: float | None = None) -> None:
-        q = (
-            self._read_stream()
-            .writeStream.foreachBatch(self.apply_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout_s) if timeout_s else q.awaitTermination()

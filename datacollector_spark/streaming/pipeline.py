@@ -105,8 +105,6 @@ class CdcIngestPipeline:
         lineage_dir: str | None = None,
         max_files_per_trigger: int | None = None,
         salt_buckets: int | None = None,
-        per_bucket_lineage: bool = True,
-        lineage_flush_rows: int = 1,
         late_limit_s: float | None = None,
         late_dir: str | None = None,
         data_rules: list["DataRule"] | None = None,
@@ -126,12 +124,6 @@ class CdcIngestPipeline:
         self.lineage_dir = lineage_dir
         self.max_files_per_trigger = max_files_per_trigger
         self.salt_buckets = salt_buckets
-        self.per_bucket_lineage = per_bucket_lineage
-        # lineage rows buffer: flushed when the buffer reaches this many rows
-        # and at end-of-run (bounded loss on crash: lineage is observability,
-        # table correctness never depends on it)
-        self.lineage_flush_rows = lineage_flush_rows
-        self._lineage_buffer: list[dict] = []
         self.batches_applied = 0
         self.on_batch_applied = None  # test hook (fault injection)
         # Late-record policy (HDFS target timeDriver + lateRecordsLimit,
@@ -232,18 +224,16 @@ class CdcIngestPipeline:
             df = df.dropDuplicatesWithinWatermark(self.dedup_fields)
         return df
 
-    def _write_lineage(self, rows: list[dict], flush: bool = False) -> None:
+    def _write_lineage(self, rows: list[dict]) -> None:
+        """Append one micro-batch's lineage rows as one parquet file, at the
+        batch's commit (lineage is observability: table correctness never
+        depends on it)."""
         if not self.lineage_dir:
             return
-        self._lineage_buffer.extend(rows)
-        if not flush and len(self._lineage_buffer) < self.lineage_flush_rows:
-            return
-        if not self._lineage_buffer:
-            return
         # Driver-direct parquet append (pyarrow), not a Spark job: lineage is
-        # a few hundred metadata rows per flush, but createDataFrame + a
+        # a few dozen metadata rows per batch, but createDataFrame + a
         # 1-task write job costs seconds of job-scheduling/committer overhead
-        # per flush (measured 5.9 s at the end of a 28 s ingest run — guide
+        # per write (measured 5.9 s at the end of a 28 s ingest run — guide
         # §5: the driver should do almost no data work, and conversely tiny
         # metadata should not be pushed through the cluster machinery).
         # The Arrow schema is derived from LINEAGE_SCHEMA (incl. the
@@ -255,11 +245,10 @@ class CdcIngestPipeline:
         import pyarrow.parquet as _pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        buf = self._lineage_buffer
         arrow_schema = to_arrow_schema(LINEAGE_SCHEMA)
         cols = []
         for f in arrow_schema:
-            vals = [r.get(f.name) for r in buf]
+            vals = [r.get(f.name) for r in rows]
             if f.name == "phase_timings":
                 vals = [
                     sorted(v.items()) if isinstance(v, dict) else v for v in vals
@@ -273,7 +262,6 @@ class CdcIngestPipeline:
         tmp = os.path.join(self.lineage_dir, "." + name + ".tmp")
         _pq.write_table(table, tmp, compression="snappy")
         os.replace(tmp, os.path.join(self.lineage_dir, name))
-        self._lineage_buffer = []
 
     # ----------------------------------------------------------- the batch
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -409,19 +397,18 @@ class CdcIngestPipeline:
                     rows, "batch_id long, file string, event string"
                 ).coalesce(1).write.mode("append").parquet(self.file_events_dir)
 
-        per_bucket: list[dict] = []
-        if self.per_bucket_lineage:
-            per_bucket = [
-                {
-                    "batch_id": batch_id,
-                    "commit_key": commit_key,
-                    "bucket": b["bucket"],
-                    "rows_source": b["rows_source"],
-                    "min_lsn": b["min_lsn"],
-                    "max_lsn": b["max_lsn"],
-                }
-                for b in res.bucket_stats
-            ]
+        per_bucket = [
+            {
+                "batch_id": batch_id,
+                "commit_key": commit_key,
+                "table_version": res.version,
+                "bucket": b["bucket"],
+                "rows_source": b["rows_source"],
+                "min_lsn": b["min_lsn"],
+                "max_lsn": b["max_lsn"],
+            }
+            for b in res.bucket_stats
+        ]
         batch_row = {
             "batch_id": batch_id,
             "commit_key": commit_key,
@@ -437,8 +424,6 @@ class CdcIngestPipeline:
             "wall_s": time.time() - t0,
             "phase_timings": res.phase_timings or None,
         }
-        for row in per_bucket:
-            row["table_version"] = res.version
         self._write_lineage([batch_row] + per_bucket)
         if self.expire_keep is not None and not res.noop:
             self.table.expire_snapshots(keep_last=self.expire_keep)
@@ -459,7 +444,6 @@ class CdcIngestPipeline:
             .start()
         )
         q.awaitTermination(timeout_s) if timeout_s else q.awaitTermination()
-        self._write_lineage([], flush=True)
 
     def run_continuous(self, processing_time: str = "5 seconds"):
         """Tail indefinitely (the production mode). Returns the query."""

@@ -96,7 +96,7 @@ def main() -> None:
     )
 
     from datacollector_spark.lake import LakeTable
-    from datacollector_spark.model import KEY_COLUMNS
+    from datacollector_spark.model import KEY_COLUMNS, payload_columns_of
     from datacollector_spark.sources.mongodb import (
         MongoOplogConfig,
         mongodb_oplog_spool_tail,
@@ -109,12 +109,7 @@ def main() -> None:
     else:
         from pyspark.sql import types as T
 
-        payload_fields = [
-            f for f in schema.fields
-            if f.name not in (
-                "op", "lsn", "seq_in_tx", "src_table", "server_id", "commit_ts"
-            ) and not f.name.startswith("old_")
-        ]
+        payload_fields = [schema[c] for c in payload_columns_of(schema)]
         table = LakeTable.create(
             spark, args.table, T.StructType(payload_fields), KEY_COLUMNS,
             num_buckets=args.buckets,

@@ -19,14 +19,22 @@ import json
 import os
 
 
+def positive_int(text: str) -> int:
+    """argparse type for counts: rejects values below 1 at parse time."""
+    n = int(text)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be >= 1, got {n}")
+    return n
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--segments", required=True)
     ap.add_argument("--table", required=True)
     ap.add_argument("--checkpoint", required=True)
     ap.add_argument("--lineage", default=None)
-    ap.add_argument("--buckets", type=int, default=64)
-    ap.add_argument("--max-files-per-trigger", type=int, default=None)
+    ap.add_argument("--buckets", type=positive_int, default=64)
+    ap.add_argument("--max-files-per-trigger", type=positive_int, default=None)
     ap.add_argument("--no-transforms", action="store_true")
     ap.add_argument("--continuous", action="store_true")
     ap.add_argument("--trigger-interval", default="10 seconds")
@@ -34,8 +42,8 @@ def main() -> None:
     # periodic compaction, snapshot expiry, skew salting, late-record policy,
     # cross-batch streaming dedup window
     ap.add_argument("--merge-mode", choices=["cow", "mor"], default="cow")
-    ap.add_argument("--mor-compact-every", type=int, default=None)
-    ap.add_argument("--expire-keep", type=int, default=None)
+    ap.add_argument("--mor-compact-every", type=positive_int, default=None)
+    ap.add_argument("--expire-keep", type=positive_int, default=None)
     ap.add_argument("--salt-buckets", type=int, default=None)
     ap.add_argument("--late-limit-s", type=float, default=None)
     ap.add_argument("--late-dir", default=None)

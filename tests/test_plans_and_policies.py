@@ -197,3 +197,34 @@ def test_spark_submit_py_files_launch(spark, tmp_path):
 
     res = json.loads(line[0][len("PIPELINE_RESULT "):])
     assert res["rows"] > 0 and res["batches"] >= 1
+
+
+def test_run_pipeline_rejects_counts_below_one(tmp_path):
+    """--expire-keep 0 (like --buckets, --max-files-per-trigger and
+    --mor-compact-every below 1) is a usage error at parse time: exit 2 with
+    the flag named, before any Spark session starts or a table is created."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [
+            sys.executable,
+            os.path.join(repo, "jobs", "run_pipeline.py"),
+            "--segments",
+            str(tmp_path / "seg"),
+            "--table",
+            str(tmp_path / "table"),
+            "--checkpoint",
+            str(tmp_path / "ckpt"),
+            "--expire-keep",
+            "0",
+        ],
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert proc.returncode == 2, proc.stderr[-2000:]
+    assert "--expire-keep" in proc.stderr
+    assert not (tmp_path / "table").exists()

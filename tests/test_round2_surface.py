@@ -248,6 +248,17 @@ def test_multitable_cdc_routes_and_merges(spark, tmp_path):
     assert [r["text"] for r in t_tab.read().collect()] == ["hello v2"]
     m_rows = {r["metric_id"]: r["value"] for r in m_tab.read().collect()}
     assert m_rows == {8: 2.5}  # metric 7 deleted
+    # commit keys keep the <stream>:<table>:microbatch-<N> shape, so replay
+    # high-water marks recorded by existing tables keep matching
+    import hashlib
+    import re
+
+    sid = hashlib.sha1(str(tmp_path / "ckpt").encode()).hexdigest()[:12]
+    for name, tab in (("transcripts", t_tab), ("metrics", m_tab)):
+        keys = tab._manifest["committed_keys"]
+        assert keys, name
+        for k in keys:
+            assert re.fullmatch(rf"{sid}:{name}:microbatch-\d+", k), k
     # replay: a fresh run over the same checkpoint is a per-table no-op
     v_t, v_m = t_tab.version, m_tab.version
     mk().run_available_now(timeout_s=300)

@@ -108,8 +108,6 @@ def main() -> None:
                 transforms=transcript_transforms,
                 lineage_dir=lineage_dir,
                 max_files_per_trigger=BATCH_FILES,
-                per_bucket_lineage=False,
-                lineage_flush_rows=1,
                 merge_mode="mor",
                 mor_compact_every=COMPACT_EVERY,
             )
