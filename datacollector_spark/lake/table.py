@@ -280,9 +280,27 @@ class LakeTable:
         return keys, hw
 
     def bucket_expr(self, *key_cols: str):
-        """bucket(N, key) — same role as Iceberg's bucket transform."""
+        """bucket(N, key) — same role as Iceberg's bucket transform. Table
+        columns are hashed as the table types them, so a batch that carries
+        a key as another type lands in the same bucket."""
         cols = list(key_cols) or [self.key_columns[0]]
-        return F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(self.num_buckets))
+        types = {f.name: f.dataType for f in self.schema.fields}
+        return F.pmod(
+            F.xxhash64(*[F.col(c).cast(types[c]) if c in types else F.col(c) for c in cols]),
+            F.lit(self.num_buckets),
+        )
+
+    def partition_by_bucket(self, df: DataFrame) -> DataFrame:
+        """Hash-partition ``df`` by the table bucket (added as ``_bucket``
+        unless already present) into min(num_buckets, shuffle partitions)
+        partitions — the only code that maps buckets to partitions. Every
+        bucket lands whole in one partition, so a version still writes one
+        file per bucket. Calling it again on its own output plans no second
+        exchange: the child already has this exact hash partitioning."""
+        if _BUCKET_COL not in df.columns:
+            df = df.withColumn(_BUCKET_COL, self.bucket_expr(*self.key_columns))
+        n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        return df.repartition(min(self.num_buckets, n), F.col(_BUCKET_COL))
 
     # ----------------------------------------------------------------- read
     def _files_for(
@@ -469,22 +487,21 @@ class LakeTable:
             )
         else:
             order_expr = F.col("lsn").cast("long")
-        # Bucket-partition the collapsed batch ONCE, before it is persisted:
-        # every downstream consumer is keyed by the bucket — the stats job
-        # groups by it, the COW join is co-partitioned on it (see below), and
-        # the writer lays files out by it — so the single narrow exchange of
-        # collapsed rows here replaces the full-width exchange of the whole
-        # merged result that used to sit in front of the write (guide §2.4:
-        # operations keyed the same way share one exchange; §3.3: key the
-        # join so its output partitioning is the one the writer needs).
-        s = (
+        # Bucket-partition the batch before it is persisted: the stats
+        # aggregate groups by the bucket, the COW join is co-partitioned on
+        # it (see below) and the writer lays files out by it, so one
+        # exchange into min(num_buckets, shuffle partitions) partitions
+        # serves them all (guide §2.4). A source that arrives with
+        # ``_bucket`` — the pipeline partitions each micro-batch by bucket
+        # before its collapse — passes it through this select, and the
+        # repartition is planned away: collapse, cache, stats, join and
+        # write then share the pipeline's one exchange.
+        bucket = [F.col(_BUCKET_COL)] if _BUCKET_COL in source.columns else []
+        s = self.partition_by_bucket(
             source.select(
-                F.col("op"), F.col("lsn"), order_expr.alias("_ord"), *norm_cols
+                F.col("op"), F.col("lsn"), order_expr.alias("_ord"), *norm_cols, *bucket
             )
-            .withColumn(_BUCKET_COL, self.bucket_expr(*keys))
-            .repartition(self.num_buckets, F.col(_BUCKET_COL))
-            .persist()
-        )
+        ).persist()
 
         # One small job discovers the touched buckets AND yields the
         # per-bucket lineage stats (offsets applied per partition). The
@@ -628,9 +645,10 @@ class LakeTable:
             F.sum(F.when(F.col("_action") == "delete", 1).otherwise(0)).alias("del"),
             F.sum(F.when(F.col("_action") == "stale", 1).otherwise(0)).alias("stale"),
         )
-        # no repartition: the join output (and the projection of s) is
-        # already hash-partitioned by the bucket, so each task holds whole
-        # buckets and partitionBy still writes one file per bucket
+        # no repartition: the join output (and the projection of s) keeps the
+        # bucket exchange of s — min(num_buckets, shuffle partitions)
+        # partitions, each holding whole buckets — so partitionBy still
+        # writes one file per bucket
         new_version, new_files = self._write_version(result.drop("_action"))
         mark("write_job")
         m = obs.get
@@ -713,11 +731,8 @@ class LakeTable:
         (read() folds pending deltas in). Returns the number rewritten."""
         if not buckets:
             return 0
-        df = self.read(buckets=buckets, include_meta=True).withColumn(
-            _BUCKET_COL, self.bucket_expr(*self.key_columns)
-        )
         new_version, new_files = self._write_version(
-            df.repartition(len(buckets), F.col(_BUCKET_COL))
+            self.partition_by_bucket(self.read(buckets=buckets, include_meta=True))
         )
         self._commit(new_version, new_files, buckets, as_deltas=False)
         return len(buckets)

@@ -11,12 +11,14 @@ Two physical strategies, same semantics (winner = max (lsn, seq_in_tx) per
 key; exact duplicates collapse to one row):
 
 * ``window`` (default): ONE pass — row_number() over (partition keys,
-  order packed DESC), keep rank 1. Spark 3.5+/4.x plans the ``_rn = 1``
-  filter as a map-side WindowGroupLimit BEFORE the exchange (verified in
-  plans/r06/), so each map partition forwards at most one row per key: the
-  shuffle carries ~winners from a single scan of the batch. The output
-  exchange is hash(keys), which the downstream lake MERGE join reuses
-  (guide §2.4: two operations keyed the same way share one exchange).
+  order packed DESC), keep rank 1. On its own input Spark 3.5+/4.x plans
+  the ``_rn = 1`` filter as a map-side WindowGroupLimit BEFORE a hash(keys)
+  exchange (verified in plans/r06/), so the shuffle carries ~winners from
+  a single scan of the batch. The ingest pipeline instead hands it a batch
+  already hash-partitioned by the lake table's bucket and collapses per
+  (_bucket, keys): the window then plans no exchange at all, and the lake
+  MERGE reuses that one bucket exchange for its cache, stats, join and
+  write (guide §2.4: operations keyed the same way share one exchange).
   Measured on the bench micro-batch shape (2M x 512B rows, ~7 rows/key,
   local[32]): 2.90 s vs 3.60 s for a winners-aggregate + join-back
   (min-of-3, noop sink). Null keys group together (matching SQL PARTITION
@@ -81,6 +83,9 @@ def lww_collapse(
 
     ``carry_columns`` — columns to carry through (defaults to every non-key
     column). ``salt_buckets`` > 1 selects the two-phase salted max_by path.
+    In the ingest pipeline the salt no longer spreads a hot key: the batch
+    arrives hash-partitioned by bucket, so each key already sits in one
+    partition and both phases run there without an exchange.
     """
     keys = key_columns or KEY_COLUMNS
     carries = carry_columns or [c for c in df.columns if c not in keys]

@@ -35,10 +35,15 @@ def mask_pii(text: Column) -> Column:
     serialization of the text column both ways was pure overhead next to
     two regexes the JVM runs identically — guide-§4 'built-ins first').
     Java and Python regex agree on these patterns for ASCII text (\\w, \\d,
-    \\b); the corpus/test alphabets are ASCII."""
-    return F.regexp_replace(
-        F.regexp_replace(text, _EMAIL, "<email>"), _LONG_NUM, "<num>"
-    )
+    \\b); the corpus/test alphabets are ASCII.
+
+    The email pattern needs a literal ``@``, so text without one skips it:
+    its unanchored ``[\\w.+-]+`` would otherwise backtrack through every
+    word of the text to find no match."""
+    email_masked = F.when(
+        text.contains("@"), F.regexp_replace(text, _EMAIL, "<email>")
+    ).otherwise(text)
+    return F.regexp_replace(email_masked, _LONG_NUM, "<num>")
 
 
 def normalize_roles(df: DataFrame, column: str = "role") -> DataFrame:

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datacollector_spark.lake.table import LakeTable
+from datacollector_spark.lake.table import _BUCKET_COL, LakeTable
 from datacollector_spark.model import changelog_schema, payload_columns_of
 from datacollector_spark.operators.collapse import lww_collapse
 
@@ -335,9 +335,14 @@ class CdcIngestPipeline:
             c for c in payload_columns_of(df.schema) if c in df.columns
         ]
         keys = self.table.key_columns
+        # One exchange per batch: partition by the table bucket first and
+        # collapse per (_bucket, keys) — the same groups as per keys, since
+        # the bucket is a function of the keys — so the collapse window
+        # plans no exchange of its own, and merge() reuses the partitioning
+        # for its cache, stats, join and write.
         collapsed = lww_collapse(
-            df,
-            key_columns=keys,
+            self.table.partition_by_bucket(df),
+            key_columns=[_BUCKET_COL, *keys],
             carry_columns=["op", "lsn"] + [c for c in payload_cols if c not in keys],
             salt_buckets=self.salt_buckets,
         )

@@ -26,6 +26,18 @@ import json
 import os
 import time
 
+# sibling script: jobs/ is the first sys.path entry when a job runs as a script
+from run_pipeline import positive_int
+
+
+def non_negative_int(text: str) -> int:
+    """argparse type for --cycles: rejects values below 0 at parse time
+    (0 is the documented "loop forever")."""
+    n = int(text)
+    if n < 0:
+        raise argparse.ArgumentTypeError(f"must be >= 0, got {n}")
+    return n
+
 
 def transcript_payload_schema() -> dict[str, str]:
     """The transcripts payload extraction ({column: spark-sql type}) —
@@ -72,16 +84,16 @@ def main() -> None:
     ap.add_argument("--oplog-collection", default="oplog.rs")
     ap.add_argument("--initial-ts", type=int, default=-1)
     ap.add_argument("--initial-ordinal", type=int, default=-1)
-    ap.add_argument("--num-partitions", type=int, default=8)
+    ap.add_argument("--num-partitions", type=positive_int, default=8)
     ap.add_argument("--spool", required=True)
     ap.add_argument("--offset-file", required=True)
     ap.add_argument("--table", required=True)
     ap.add_argument("--checkpoint", required=True)
     ap.add_argument("--lineage", default=None)
-    ap.add_argument("--buckets", type=int, default=64)
+    ap.add_argument("--buckets", type=positive_int, default=64)
     ap.add_argument("--merge-mode", choices=["cow", "mor"], default="cow")
-    ap.add_argument("--mor-compact-every", type=int, default=None)
-    ap.add_argument("--cycles", type=int, default=1,
+    ap.add_argument("--mor-compact-every", type=positive_int, default=None)
+    ap.add_argument("--cycles", type=non_negative_int, default=1,
                     help="tail cycles to run; 0 = loop forever")
     ap.add_argument("--poll-interval", type=float, default=5.0)
     args = ap.parse_args()

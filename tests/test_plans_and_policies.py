@@ -228,3 +228,42 @@ def test_run_pipeline_rejects_counts_below_one(tmp_path):
     assert proc.returncode == 2, proc.stderr[-2000:]
     assert "--expire-keep" in proc.stderr
     assert not (tmp_path / "table").exists()
+
+
+def test_run_mongo_cdc_rejects_bad_counts_at_parse_time(tmp_path):
+    """jobs/run_mongo_cdc.py checks its counts at parse time, like
+    run_pipeline.py: --buckets 0 exits 2 with the flag named, before any
+    Spark session starts, any table is created or any oplog is read."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [
+            sys.executable,
+            os.path.join(repo, "jobs", "run_mongo_cdc.py"),
+            "--mongo-host",
+            "127.0.0.1",
+            "--mongo-port",
+            "1",
+            "--spool",
+            str(tmp_path / "spool"),
+            "--offset-file",
+            str(tmp_path / "oplog.offset"),
+            "--table",
+            str(tmp_path / "table"),
+            "--checkpoint",
+            str(tmp_path / "ckpt"),
+            "--buckets",
+            "0",
+        ],
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert proc.returncode == 2, proc.stderr[-2000:]
+    assert "--buckets" in proc.stderr
+    assert "Spark" not in proc.stderr
+    assert not (tmp_path / "table").exists()
+    assert not (tmp_path / "spool").exists()

@@ -47,6 +47,10 @@ def test_mask_pii_jvm_matches_python_regex(spark):
         None,
         "two bob@a.bc and eve@d.ef",
         "num 9999999 and 88888888.",
+        # the email regex is skipped when the text has no '@'
+        "a.b+c-d x-y.z",
+        "@",
+        "x@y",
     ]
     df = spark.createDataFrame([(c,) for c in cases], "t string")
     got = [r[0] for r in df.select(mask_pii(F.col("t"))).collect()]

@@ -261,3 +261,72 @@ def test_kill_restart_exactly_once_mor(spark, seg_data, tmp_path):
     table.compact_deltas()
     assert table.delta_file_count() == 0
     assert_frame_equal(_final(table), oracle, check_dtype=False)
+
+
+def test_apply_batch_job_count_and_one_file_per_bucket(spark, seg_data, tmp_path):
+    """A micro-batch is bucket-partitioned once, before its collapse, and
+    the collapse, cache, stats, join and write all reuse that exchange.
+    Pinned through the status tracker: at most 4 Spark jobs onto an empty
+    table and 5 with a target (one exchange more per batch costs a job).
+    With 16 buckets over 4 shuffle partitions every bucket still lands
+    whole in one task, so each committed version holds one file per
+    bucket; the table matches the oracle."""
+    import os
+
+    src, oracle, _ = seg_data
+    segs = sorted(f for f in os.listdir(src) if f.endswith(".parquet"))
+    halves = [segs[: len(segs) // 2], segs[len(segs) // 2 :]]
+    table = LakeTable.create(
+        spark, str(tmp_path / "t"), transcripts_schema(), KEY_COLUMNS, num_buckets=16
+    )
+    pipe = CdcIngestPipeline(spark, src, table, str(tmp_path / "ckpt"))
+    sc = spark.sparkContext
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    jobs = []
+    try:
+        for batch_id, files in enumerate(halves):
+            batch = spark.read.schema(changelog_schema()).parquet(
+                *[os.path.join(src, f) for f in files]
+            )
+            group = f"apply-batch-{tmp_path.name}-{batch_id}"
+            sc.setJobGroup(group, group)
+            try:
+                pipe.apply_batch(batch, batch_id)
+            finally:
+                sc.setJobGroup("", "")
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert jobs[0] <= 4 and jobs[1] <= 5, jobs
+    for version in (1, 2):
+        files = table._load_manifest(version)["files"]
+        assert len(files) == 16
+        assert all(len(rels) == 1 for rels in files.values()), (version, files)
+    assert_frame_equal(_final(table), oracle, check_dtype=False)
+
+
+def test_apply_batch_buckets_keys_as_the_table_types_them(spark, tmp_path):
+    """The pipeline buckets a batch before merge() casts it to the table's
+    types: a key the batch carries as int in a table that stores it as long
+    must still hash to the bucket its stored row lives in, or an update
+    lands as a second row for the key."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [
+            T.StructField("conv_id", T.StringType()),
+            T.StructField("turn_idx", T.LongType()),
+            T.StructField("text", T.StringType()),
+        ]
+    )
+    table = LakeTable.create(spark, str(tmp_path / "t"), schema, KEY_COLUMNS, num_buckets=16)
+    pipe = CdcIngestPipeline(spark, str(tmp_path / "src"), table, str(tmp_path / "ckpt"))
+    ddl = "op int, lsn long, seq_in_tx int, conv_id string, turn_idx int, text string"
+    pipe.apply_batch(
+        spark.createDataFrame([(0, i, 0, f"c{i}", i, "old") for i in range(50)], ddl), 0
+    )
+    pipe.apply_batch(spark.createDataFrame([(1, 100, 0, "c7", 7, "new")], ddl), 1)
+    got = table.read().orderBy("conv_id").toPandas()
+    assert len(got) == 50
+    assert got.set_index("conv_id").loc["c7", "text"] == "new"
