@@ -13,8 +13,9 @@ no change to the rest of the engine:
     rewrites ONLY the buckets its source touches (partition pruning at the
     write side — the property that bounds rewrite cost at 10^10 rows)
   * schema evolution / mergeSchema     -> :meth:`LakeTable.evolve_schema`
-    (add-column + int->long / float->double widening, mirroring the Hive
-    drift sink, hive-protolib/.../HiveMetastoreTarget.java:228-255)
+    (add-column + int->long / float->double widening of non-key columns,
+    mirroring the Hive drift sink,
+    hive-protolib/.../HiveMetastoreTarget.java:228-255)
   * exactly-once sink                  -> commit keys recorded per snapshot;
     replaying a committed micro-batch is a no-op (the reference's offset
     tracker, ProductionSourceOffsetTracker.java:59-85, upgraded from
@@ -36,6 +37,11 @@ the commit key (defense in depth: at-least-once delivery collapses to
 exactly-once state), and stays correct across micro-batch boundaries when
 two changes to one key share an lsn but differ in seq_in_tx.
 
+One last-writer-wins fold, :meth:`LakeTable._lww_fold`, implements it for
+COW merge, MOR read and compaction alike: per key, the row with the highest
+`_lsn` wins, a stored row beating a batch row of equal `_lsn`; deletes are
+kept as tombstone rows.
+
 Concurrency contract: single writer (the streaming query); readers see
 committed snapshots only (manifest pointer flips atomically via rename).
 """
@@ -49,7 +55,7 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -328,41 +334,74 @@ class LakeTable:
         Iceberg's add-column evolution.
 
         Merge-on-read: when delta files exist (merge(mode='mor')), the
-        snapshot is reconstructed by a read-side LWW collapse over base +
-        delta rows (winner = max _lsn per key), exactly Iceberg-v2/Hudi MOR
-        semantics with an equality-delete generalization.
+        snapshot is reconstructed by :meth:`_lww_fold` over base + delta
+        rows, exactly Iceberg-v2/Hudi MOR semantics with an equality-delete
+        generalization.
+
+        ``include_meta`` keeps the tombstones and the ``_lsn`` and
+        ``_deleted`` columns, and after a fold its ``_bucket`` column, whose
+        partitioning a rewrite reuses.
         """
         manifest = self._manifest if version is None else self._load_manifest(version)
         schema = T.StructType.fromJson(manifest["schema"])
-        base = self._files_for(manifest, buckets, "files")
         deltas = self._files_for(manifest, buckets, "deltas")
-        files = base + deltas
+        files = self._files_for(manifest, buckets) + deltas
         if not files:
             df = self.spark.createDataFrame([], schema)
         else:
             df = self.spark.read.schema(schema).parquet(*files)
         if deltas:
-            keys = manifest["key_columns"]
-            # read-side LWW winner as a rank-1 window (round 6): one scan +
-            # one exchange with a map-side WindowGroupLimit pre-filter,
-            # replacing the winners aggregate + join + full-width duplicate
-            # removal (same shape change as operators/collapse.py; replayed
-            # deltas tie the base row at equal _lsn with identical content,
-            # so the arbitrary rank-1 pick among ties is value-identical)
-            from pyspark.sql import Window
-
-            w = Window.partitionBy(*keys).orderBy(F.col(LSN_COLUMN).desc())
-            df = (
-                df.withColumn("_rn", F.row_number().over(w))
-                .where(F.col("_rn") == 1)
-                .drop("_rn")
-            )
+            df = self._lww_fold(df)
         if not include_meta:
             # live rows only: delete tombstones are an implementation detail
             df = df.where(
                 ~F.coalesce(F.col(DELETED_COLUMN), F.lit(False))
-            ).drop(LSN_COLUMN, DELETED_COLUMN)
+            ).drop(LSN_COLUMN, DELETED_COLUMN, _BUCKET_COL)
         return df
+
+    def _lww_fold(
+        self,
+        stored: DataFrame | None,
+        batch: DataFrame | None = None,
+        obs: Observation | None = None,
+    ) -> DataFrame:
+        """Last-writer-wins: one row per (``_bucket``, keys), the one with
+        the highest ``_lsn``; a stored row beats a batch row of equal
+        ``_lsn`` (the ``s._ord > t._lsn`` guard: a replay changes nothing).
+        Stored ties are base and replayed delta rows of identical content,
+        so the pick among them is value-identical.
+
+        Both sides are bucket-partitioned before their union, which keeps
+        that partitioning: the window plans no exchange over the batch, and
+        each output partition holds whole buckets, so a version still
+        writes one file per bucket.
+
+        With ``obs``, the same window pass counts the batch rows: winners
+        that are tombstones are deletes, winners whose key held a stored
+        row updates (a resurrected tombstone included), lone winners
+        inserts, and losers stale."""
+        sides = [
+            self.partition_by_bucket(df).withColumn("_batch", F.lit(is_batch))
+            for df, is_batch in ((stored, False), (batch, True))
+            if df is not None
+        ]
+        df = sides[0] if len(sides) == 1 else sides[0].unionByName(sides[1])
+        w = Window.partitionBy(_BUCKET_COL, *self.key_columns).orderBy(
+            F.col(LSN_COLUMN).desc(), F.col("_batch")
+        )
+        df = df.withColumn("_rn", F.row_number().over(w))
+        if obs is not None:
+            won = F.col("_batch") & (F.col("_rn") == 1)
+            live = ~F.col(DELETED_COLUMN)
+            matched = F.lead("_batch").over(w).isNotNull()
+            df = df.withColumn("_matched", matched).observe(
+                obs,
+                F.count_if(won & live & ~F.col("_matched")).alias("ins"),
+                F.count_if(won & live & F.col("_matched")).alias("upd"),
+                F.count_if(won & ~live).alias("del"),
+                F.count_if(F.col("_batch") & (F.col("_rn") > 1)).alias("stale"),
+            )
+        return df.where(F.col("_rn") == 1).drop("_rn", "_batch", "_matched")
 
     def delta_file_count(self, buckets: list[int] | None = None) -> int:
         return len(self._files_for(self._manifest, buckets, "deltas"))
@@ -371,6 +410,8 @@ class LakeTable:
     def evolve_schema(self, source_schema: T.StructType) -> list[str]:
         """Diff an incoming batch schema against the table schema; add new
         columns and apply legal widenings. Returns the evolved column names.
+        A widening of a key column raises ``ValueError`` before the schema
+        changes: the bucket hash depends on the key's type.
 
         The HiveMetadataProcessor drift-detection + HiveMetastoreTarget
         ALTER TABLE ADD COLUMNS flow (SURVEY.md §2.6), as in-place manifest
@@ -390,6 +431,15 @@ class LakeTable:
             elif cur.dataType != f_new.dataType:
                 pair = (cur.dataType.typeName(), f_new.dataType.typeName())
                 if pair in _WIDENINGS:
+                    if f_new.name in self.key_columns:
+                        # xxhash64 hashes an int and a long differently:
+                        # stored keys would sit in other buckets than the
+                        # same keys hash to after the widening
+                        raise ValueError(
+                            f"cannot widen key column {f_new.name!r} from "
+                            f"{pair[0]} to {pair[1]}: it would re-bucket the "
+                            "stored keys"
+                        )
                     idx = [x.name for x in new_fields].index(f_new.name)
                     new_fields[idx] = T.StructField(f_new.name, f_new.dataType, True)
                     evolved.append(f_new.name)
@@ -410,21 +460,23 @@ class LakeTable:
         """Apply a COLLAPSED change batch (one row per key, with `op` and
         `lsn` columns) to the table.
 
-        mode='cow': copy-on-write at bucket granularity — touched buckets are
-        rewritten (join + rewrite; read stays a plain scan). Any pending MOR
-        deltas in the touched buckets are folded in by the same pass.
+        mode='cow': copy-on-write at bucket granularity — the touched
+        buckets' stored rows (base and pending MOR deltas) are folded with
+        the batch by :meth:`_lww_fold` and rewritten as their new base; read
+        stays a plain scan.
 
         mode='mor': merge-on-read — the batch is APPENDED as bucketed delta
-        files (no join, no rewrite; ingest cost ∝ batch size only). Reads
-        reconstruct via LWW collapse over base+deltas; call
+        files (no rewrite; ingest cost ∝ batch size only). Reads
+        reconstruct via the same fold over base+deltas; call
         :meth:`compact_deltas` (or let the pipeline do it every K batches)
         to fold deltas into the base. This is the Iceberg-v2 / Hudi MOR
         shape — the ingest mode for 10^10-event scale, where rewriting the
         table per micro-batch is the bottleneck.
 
         The caller collapses first (operators.collapse.lww_collapse); the
-        cross-batch LWW guard (s.lsn > t._lsn) is enforced at the join in
-        COW mode and at read-time winner selection in MOR mode.
+        cross-batch LWW guard (s.lsn > t._lsn) is the fold's order, applied
+        at write time in COW mode and at read time in MOR mode, where every
+        batch row counts as an insert or a delete.
         """
         if mode not in ("cow", "mor"):
             raise ValueError(f"merge mode must be 'cow' or 'mor', got {mode!r}")
@@ -488,14 +540,14 @@ class LakeTable:
         else:
             order_expr = F.col("lsn").cast("long")
         # Bucket-partition the batch before it is persisted: the stats
-        # aggregate groups by the bucket, the COW join is co-partitioned on
-        # it (see below) and the writer lays files out by it, so one
-        # exchange into min(num_buckets, shuffle partitions) partitions
-        # serves them all (guide §2.4). A source that arrives with
-        # ``_bucket`` — the pipeline partitions each micro-batch by bucket
-        # before its collapse — passes it through this select, and the
-        # repartition is planned away: collapse, cache, stats, join and
-        # write then share the pipeline's one exchange.
+        # aggregate groups by the bucket, the fold partitions by it and the
+        # writer lays files out by it, so one exchange into
+        # min(num_buckets, shuffle partitions) partitions serves them all
+        # (guide §2.4). A source that arrives with ``_bucket`` — the
+        # pipeline partitions each micro-batch by bucket before its
+        # collapse — passes it through this select, and the repartition is
+        # planned away: collapse, cache, stats, fold and write then share
+        # the pipeline's one exchange.
         bucket = [F.col(_BUCKET_COL)] if _BUCKET_COL in source.columns else []
         s = self.partition_by_bucket(
             source.select(
@@ -530,126 +582,32 @@ class LakeTable:
             s.unpersist()
             return MergeResult(version=self.version, commit_key=commit_key, noop=True)
 
-        has_target = mode == "cow" and bool(
+        # The batch as table rows: deletes become tombstones, which carry
+        # the key's _lsn high-water mark, so a stale insert arriving in a
+        # later micro-batch loses to them instead of resurrecting the row.
+        is_del = F.col("op") == OP_DELETE
+        batch = s.select(
+            F.col(_BUCKET_COL),
+            *[F.col(k) for k in keys],
+            *[
+                F.when(is_del, F.lit(None)).otherwise(F.col(c)).alias(c)
+                for c in non_key_cols
+            ],
+            F.col("_ord").alias(LSN_COLUMN),
+            is_del.alias(DELETED_COLUMN),
+        )
+        # MOR, and COW onto buckets that hold no files yet, fold the batch
+        # alone
+        files = (
             self._files_for(self._manifest, touched)
             + self._files_for(self._manifest, touched, "deltas")
+            if mode == "cow"
+            else []
         )
-        if not has_target:
-            # No join: MOR appends the batch as delta rows, and a COW merge
-            # whose touched buckets hold no data yet lands it as their base.
-            # Every source row lands directly — live rows for op!=2,
-            # tombstones for op=2 (tombstones still matter: they carry the
-            # LSN high-water mark against later out-of-order stale inserts).
-            # In MOR, insert vs update is resolved at read time.
-            is_del = F.col("op") == OP_DELETE
-            result = s.select(
-                F.when(is_del, F.lit("delete")).otherwise(F.lit("insert")).alias(
-                    "_action"
-                ),
-                F.col(_BUCKET_COL),
-                *[F.col(k) for k in keys],
-                *[
-                    F.when(is_del, F.lit(None)).otherwise(F.col(c)).alias(c)
-                    for c in non_key_cols
-                ],
-                F.col("_ord").alias(LSN_COLUMN),
-                is_del.alias(DELETED_COLUMN),
-            )
-        else:
-            # read() folds pending MOR deltas into the view, so a COW merge
-            # over delta-carrying buckets doubles as their compaction
-            target = self.read(buckets=touched, include_meta=True).withColumn(
-                _BUCKET_COL, self.bucket_expr(*keys)
-            )
-            s_pref = s.select(
-                *[F.col(k).alias(f"s_{k}") for k in keys],
-                F.col(_BUCKET_COL).alias("s__bucket"),
-                "op",
-                "_ord",
-                *[F.col(c).alias(f"s_{c}") for c in non_key_cols],
-            )
-            # plain equality: key columns are non-null by contract (primary
-            # key); eqNullSafe costs ~30% extra join time for nothing here.
-            # The bucket equality leads the condition: bucket = f(keys) on
-            # both sides, so it never changes the match set, but it lets the
-            # join co-partition on the bucket alone (the source side is
-            # already bucket-partitioned in the cache;
-            # requireAllClusterKeysForCoPartition=false in session.py) —
-            # the join output then lands partitioned exactly as the writer
-            # needs it and the old full-width result repartition is gone.
-            cond = [F.col("s__bucket") == F.col(_BUCKET_COL)] + [
-                F.col(f"s_{k}") == F.col(k) for k in keys
-            ]
-            # SHUFFLE_HASH: build the hash map on the (collapsed, cached)
-            # batch side instead of sort-merging — skips the two full sorts
-            # (guide §3.1; preferSortMergeJoin=false alone does not pick SHJ
-            # for this full-outer shape, and AQE's SMJ->SHJ rewrite is off
-            # by default). The batch side is bounded by micro-batch size, so
-            # the per-partition build map is small by construction.
-            joined = target.join(
-                s_pref.hint("SHUFFLE_HASH"), on=cond, how="full_outer"
-            )
-
-            src_matched = F.col("_ord").isNotNull()
-            tgt_matched = F.col(LSN_COLUMN).isNotNull()  # live row OR tombstone
-            fresh = src_matched & (~tgt_matched | (F.col("_ord") > F.col(LSN_COLUMN)))
-
-            # Deletes always materialize a tombstone (even for never-seen
-            # keys): the tombstone carries the per-key LSN high-water mark,
-            # so a stale out-of-order insert arriving in a LATER micro-batch
-            # is rejected by the same `s.lsn > t._lsn` guard instead of
-            # resurrecting the row.
-            action = (
-                F.when(~src_matched, F.lit("keep"))
-                .when(~fresh, F.lit("stale"))
-                .when(F.col("op") == OP_DELETE, F.lit("delete"))
-                .when(tgt_matched, F.lit("update"))  # incl. tombstone resurrection
-                .otherwise(F.lit("insert"))
-            )
-
-            from_src = F.col("_action").isin("insert", "update", "delete")
-            is_tombstone = F.col("_action") == "delete"
-            out_cols = [
-                F.when(from_src, F.col(f"s_{k}")).otherwise(F.col(k)).alias(k)
-                for k in keys
-            ]
-            out_cols += [
-                F.when(is_tombstone, F.lit(None))
-                .when(from_src, F.col(f"s_{c}"))
-                .otherwise(F.col(c))
-                .alias(c)
-                for c in non_key_cols
-            ]
-            out_cols.append(
-                F.when(from_src, F.col("_ord"))
-                .otherwise(F.col(LSN_COLUMN))
-                .alias(LSN_COLUMN)
-            )
-            out_cols.append(
-                F.when(is_tombstone, F.lit(True))
-                .when(from_src, F.lit(False))
-                .otherwise(F.coalesce(F.col(DELETED_COLUMN), F.lit(False)))
-                .alias(DELETED_COLUMN)
-            )
-            result = joined.withColumn("_action", action).select(
-                "_action",
-                F.coalesce(F.col(_BUCKET_COL), F.col("s__bucket")).alias(_BUCKET_COL),
-                *out_cols,
-            )
-
+        stored = self.spark.read.schema(schema).parquet(*files) if files else None
         obs = Observation(f"merge-{uuid.uuid4().hex[:8]}")
-        result = result.observe(
-            obs,
-            F.sum(F.when(F.col("_action") == "insert", 1).otherwise(0)).alias("ins"),
-            F.sum(F.when(F.col("_action") == "update", 1).otherwise(0)).alias("upd"),
-            F.sum(F.when(F.col("_action") == "delete", 1).otherwise(0)).alias("del"),
-            F.sum(F.when(F.col("_action") == "stale", 1).otherwise(0)).alias("stale"),
-        )
-        # no repartition: the join output (and the projection of s) keeps the
-        # bucket exchange of s — min(num_buckets, shuffle partitions)
-        # partitions, each holding whole buckets — so partitionBy still
-        # writes one file per bucket
-        new_version, new_files = self._write_version(result.drop("_action"))
+        result = self._lww_fold(stored, batch, obs)
+        new_version, new_files = self._write_version(result)
         mark("write_job")
         m = obs.get
         mark("obs_get")

@@ -7,30 +7,20 @@ The distributed generalization of two reference behaviors:
     (mysql-binlog-lib/.../BinaryLogConsumer.java:148-155) — at-least-once
     delivery collapsed to effectively-once per key.
 
-Two physical strategies, same semantics (winner = max (lsn, seq_in_tx) per
-key; exact duplicates collapse to one row):
-
-* ``window`` (default): ONE pass — row_number() over (partition keys,
-  order packed DESC), keep rank 1. On its own input Spark 3.5+/4.x plans
-  the ``_rn = 1`` filter as a map-side WindowGroupLimit BEFORE a hash(keys)
-  exchange (verified in plans/r06/), so the shuffle carries ~winners from
-  a single scan of the batch. The ingest pipeline instead hands it a batch
-  already hash-partitioned by the lake table's bucket and collapses per
-  (_bucket, keys): the window then plans no exchange at all, and the lake
-  MERGE reuses that one bucket exchange for its cache, stats, join and
-  write (guide §2.4: operations keyed the same way share one exchange).
-  Measured on the bench micro-batch shape (2M x 512B rows, ~7 rows/key,
-  local[32]): 2.90 s vs 3.60 s for a winners-aggregate + join-back
-  (min-of-3, noop sink). Null keys group together (matching SQL PARTITION
-  BY semantics) — key columns are non-null by pipeline contract either way.
-
-* salted two-phase ``max_by`` (``salt_buckets`` > 1): groupBy(keys, salt)
-  then groupBy(keys), each .agg(max_by(payload, order)). Spark executes
-  non-fixed-width aggregation buffers as SortAggregate (partial+final,
-  still map-side combined — shuffle volume = distinct keys, at the price of
-  a map-side sort); the salt splits an adversarially hot key across
-  reducers in the first phase (north rule: salted repartitioning for hot
-  keys).
+Winner = max (lsn, seq_in_tx) per key; exact duplicates collapse to one
+row. ONE pass — row_number() over (partition keys, order packed DESC), keep
+rank 1. On its own input Spark 3.5+/4.x plans the ``_rn = 1`` filter as a
+map-side WindowGroupLimit BEFORE a hash(keys) exchange, so the shuffle
+carries ~winners from a single scan of the batch. The ingest pipeline
+instead hands it a batch already hash-partitioned by the lake table's
+bucket and collapses per (_bucket, keys): the window then plans no exchange
+at all, and the lake MERGE reuses that one bucket exchange for its cache,
+stats, fold and write (guide §2.4: operations keyed the same way share one
+exchange). A hot key stays in its bucket's partition either way. Measured
+on the bench micro-batch shape (2M x 512B rows, ~7 rows/key, local[32]):
+2.90 s vs 3.60 s for a winners-aggregate + join-back (min-of-3, noop sink).
+Null keys group together (matching SQL PARTITION BY semantics) — key
+columns are non-null by pipeline contract either way.
 
 Order packing: packed = lsn * 2^16 + seq_in_tx. Contract: 0 <= lsn < 2^47
 and 0 <= seq_in_tx < 2^16 (seq is masked defensively) — the generator and
@@ -41,7 +31,7 @@ so an out-of-budget lsn would otherwise flip LWW winners with no error.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from datacollector_spark.model import KEY_COLUMNS
@@ -77,15 +67,11 @@ def lww_collapse(
     key_columns: list[str] | None = None,
     order_columns: tuple[str, str] = ("lsn", "seq_in_tx"),
     carry_columns: list[str] | None = None,
-    salt_buckets: int | None = None,
 ) -> DataFrame:
     """Collapse to one row per key: the row with the max (lsn, seq_in_tx).
 
     ``carry_columns`` — columns to carry through (defaults to every non-key
-    column). ``salt_buckets`` > 1 selects the two-phase salted max_by path.
-    In the ingest pipeline the salt no longer spreads a hot key: the batch
-    arrives hash-partitioned by bucket, so each key already sits in one
-    partition and both phases run there without an exchange.
+    column).
     """
     keys = key_columns or KEY_COLUMNS
     carries = carry_columns or [c for c in df.columns if c not in keys]
@@ -94,26 +80,10 @@ def lww_collapse(
         if oc not in carries:
             carries = carries + [oc]
 
-    if not salt_buckets or salt_buckets <= 1:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(*keys).orderBy(F.col("_pk").desc())
-        return (
-            df.withColumn("_pk", _packed_order(lsn_col, seq_col))
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .select(*keys, *carries)
-        )
-
-    # ---- salted two-phase max_by
-    payload = F.struct(*[F.col(c) for c in carries])
-    order = F.struct(F.col(lsn_col), F.col(seq_col))
-    salt = F.pmod(F.xxhash64(F.col(lsn_col), F.col(seq_col)), F.lit(salt_buckets))
+    w = Window.partitionBy(*keys).orderBy(F.col("_pk").desc())
     return (
-        df.groupBy(*keys, salt.alias("_salt"))
-        .agg(F.max_by(payload, order).alias("_p"))
-        .select(*keys, "_p.*")
-        .groupBy(*keys)
-        .agg(F.max_by(payload, order).alias("_p"))
-        .select(*keys, "_p.*")
+        df.withColumn("_pk", _packed_order(lsn_col, seq_col))
+        .withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") == 1)
+        .select(*keys, *carries)
     )

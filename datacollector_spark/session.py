@@ -61,18 +61,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
-        # MERGE's full-outer join can't broadcast; shuffled-hash beats
-        # sort-merge for it (no sort of the rewritten buckets)
-        .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        # Allow a join child whose existing hash partitioning covers a
-        # SUBSET of the join keys to be used as-is (the other side shuffles
-        # to match) instead of re-shuffling both sides by all keys. The lake
-        # MERGE relies on this: the collapsed batch is bucket-partitioned
-        # once, the bucket leads the join condition, and the join output
-        # lands partitioned exactly as the bucketed writer needs — deleting
-        # a full-width exchange of the merged result per micro-batch.
-        .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)

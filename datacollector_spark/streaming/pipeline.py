@@ -104,7 +104,6 @@ class CdcIngestPipeline:
         transforms=None,  # Callable[[DataFrame], DataFrame] over the batch
         lineage_dir: str | None = None,
         max_files_per_trigger: int | None = None,
-        salt_buckets: int | None = None,
         late_limit_s: float | None = None,
         late_dir: str | None = None,
         data_rules: list["DataRule"] | None = None,
@@ -123,7 +122,6 @@ class CdcIngestPipeline:
         self.transforms = transforms
         self.lineage_dir = lineage_dir
         self.max_files_per_trigger = max_files_per_trigger
-        self.salt_buckets = salt_buckets
         self.batches_applied = 0
         self.on_batch_applied = None  # test hook (fault injection)
         # Late-record policy (HDFS target timeDriver + lateRecordsLimit,
@@ -134,7 +132,8 @@ class CdcIngestPipeline:
         self.late_dir = late_dir
         # Data rules (container/.../config/DataRuleDefinition.java:28-66 +
         # DataObserverRunner): SQL condition + threshold, evaluated per
-        # micro-batch; firings append alert rows to <lineage_dir>/../alerts.
+        # micro-batch; firings append alert dicts to the in-memory
+        # ``alerts`` list (nothing writes them to disk).
         self.data_rules = data_rules or []
         self.alerts: list[dict] = []
         # rolling per-rule match counts for moving-window meters (bounded:
@@ -339,12 +338,11 @@ class CdcIngestPipeline:
         # collapse per (_bucket, keys) — the same groups as per keys, since
         # the bucket is a function of the keys — so the collapse window
         # plans no exchange of its own, and merge() reuses the partitioning
-        # for its cache, stats, join and write.
+        # for its cache, stats, fold and write.
         collapsed = lww_collapse(
             self.table.partition_by_bucket(df),
             key_columns=[_BUCKET_COL, *keys],
             carry_columns=["op", "lsn"] + [c for c in payload_cols if c not in keys],
-            salt_buckets=self.salt_buckets,
         )
         # Transform AFTER collapse: per-record transforms (mask/normalize)
         # are row-pure and never touch keys/op/lsn, so they commute with

@@ -39,12 +39,11 @@ def main() -> None:
     ap.add_argument("--continuous", action="store_true")
     ap.add_argument("--trigger-interval", default="10 seconds")
     # production knobs (see CdcIngestPipeline): merge-on-read ingest with
-    # periodic compaction, snapshot expiry, skew salting, late-record policy,
+    # periodic compaction, snapshot expiry, late-record policy,
     # cross-batch streaming dedup window
     ap.add_argument("--merge-mode", choices=["cow", "mor"], default="cow")
     ap.add_argument("--mor-compact-every", type=positive_int, default=None)
     ap.add_argument("--expire-keep", type=positive_int, default=None)
-    ap.add_argument("--salt-buckets", type=int, default=None)
     ap.add_argument("--late-limit-s", type=float, default=None)
     ap.add_argument("--late-dir", default=None)
     ap.add_argument("--dedup-within", default=None, metavar="'10 minutes'")
@@ -83,7 +82,6 @@ def main() -> None:
         merge_mode=args.merge_mode,
         mor_compact_every=args.mor_compact_every,
         expire_keep=args.expire_keep,
-        salt_buckets=args.salt_buckets,
         late_limit_s=args.late_limit_s,
         late_dir=args.late_dir,
         dedup_within=args.dedup_within,

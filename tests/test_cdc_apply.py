@@ -8,6 +8,8 @@ Per-turn text equality under stable (conv_id, turn_idx) ordering.
 
 from __future__ import annotations
 
+import datetime as dt
+
 import pandas as pd
 import pytest
 from pandas.testing import assert_frame_equal
@@ -124,14 +126,6 @@ def test_lsn_guard_rejects_stale_replay_without_commit_key(
     assert_frame_equal(before, oracle_final, check_dtype=False)
 
 
-def test_salted_collapse_equivalent(spark, changelog):
-    plain = lww_collapse(changelog.drop("delivery_pos"))
-    salted = lww_collapse(changelog.drop("delivery_pos"), salt_buckets=8)
-    a = plain.orderBy(*KEY_COLUMNS).toPandas().reset_index(drop=True)
-    b = salted.select(*a.columns).orderBy(*KEY_COLUMNS).toPandas().reset_index(drop=True)
-    assert_frame_equal(a, b, check_dtype=False)
-
-
 def test_delete_then_reinsert(spark, tmp_table_dir):
     """Tombstone ordering: ins(lsn1) del(lsn2) ins(lsn3) -> row present with
     lsn3 text; ins(lsn1) del(lsn2) -> absent."""
@@ -158,3 +152,62 @@ def test_delete_then_reinsert(spark, tmp_table_dir):
     got = table.read().orderBy("conv_id").toPandas()
     assert got["conv_id"].tolist() == ["c1"]
     assert got["text"].tolist() == ["reborn"]
+
+
+def _ops(spark, rows):
+    """A one-row-per-key change batch from (op, lsn, conv_id, text) rows."""
+    ts = dt.datetime(2025, 1, 1)
+    return spark.createDataFrame(
+        [
+            (op, lsn, 0, conv, 0, None if op == 2 else "user", text, None, ts)
+            for op, lsn, conv, text in rows
+        ],
+        "op int, lsn long, seq_in_tx int, conv_id string, turn_idx int, "
+        "role string, text string, tool string, ts timestamp",
+    )
+
+
+def _counts(res):
+    return res.rows_inserted, res.rows_updated, res.rows_deleted, res.rows_lww_skipped
+
+
+@pytest.mark.parametrize("stored_as", ["cow", "mor"])
+def test_cow_merge_exact_counts(spark, tmp_table_dir, stored_as):
+    """Exact insert/update/delete/stale counts and final state of a COW
+    merge over stored rows held as base files (stored_as='cow') or as
+    pending MOR deltas (stored_as='mor')."""
+    table = LakeTable.create(
+        spark, tmp_table_dir, transcripts_schema(), KEY_COLUMNS, num_buckets=4
+    )
+    table.merge(
+        _ops(
+            spark,
+            [(1, 5, k, f"{k}0") for k in "ABCDU"] + [(1, 50, k, f"{k}0") for k in "EF"],
+        ),
+        commit_key="s1",
+        mode=stored_as,
+    )
+    table.merge(_ops(spark, [(2, 10, "D", None)]), commit_key="s2", mode=stored_as)
+    res = table.merge(
+        _ops(
+            spark,
+            [
+                (1, 100, "G", "G1"),  # insert
+                (1, 100, "B", "B1"),  # update
+                (2, 100, "C", None),  # delete of an existing key
+                (2, 100, "H", None),  # delete of a never-seen key
+                (1, 100, "D", "D1"),  # tombstone resurrection: an update
+                (1, 50, "E", "E1"),  # equal-lsn replay: stale
+                (1, 40, "F", "F1"),  # older lsn: stale
+            ],
+        ),
+        commit_key="c",
+    )
+    assert _counts(res) == (1, 2, 2, 2)
+    # H's tombstone rejects an insert older than the delete
+    res = table.merge(_ops(spark, [(1, 90, "H", "H1")]), commit_key="late")
+    assert _counts(res) == (0, 0, 0, 1)
+    got = {r["conv_id"]: r["text"] for r in table.read().collect()}
+    assert got == {
+        "A": "A0", "B": "B1", "D": "D1", "E": "E0", "F": "F0", "G": "G1", "U": "U0"
+    }

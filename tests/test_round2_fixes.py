@@ -92,6 +92,34 @@ def test_date_to_ltz_timestamp_is_not_widened(spark, tmp_path):
     assert table.read().count() == 2
 
 
+def test_key_column_widening_rejected(spark, tmp_path):
+    """xxhash64 hashes an int and a long differently: widening a key column
+    would leave stored keys in other buckets than their updates hash to,
+    so the update lands as a second row. The merge raises instead, before
+    the schema or the table changes."""
+    table = LakeTable.create(
+        spark, str(tmp_path / "t"), _mini_schema(T.StringType()), KEY_COLUMNS, num_buckets=16
+    )
+    ddl = "op int, lsn long, conv_id string, turn_idx {}, v string"
+    table.merge(
+        spark.createDataFrame(
+            [(1, i, f"c{i}", i, "old") for i in range(50)], ddl.format("int")
+        ),
+        commit_key="b-0",
+    )
+    with pytest.raises(ValueError, match="turn_idx"):
+        table.merge(
+            spark.createDataFrame([(1, 100, "c7", 7, "new")], ddl.format("long")),
+            commit_key="b-1",
+        )
+    for t in (table, LakeTable(spark, table.path)):
+        assert t.version == 1 and not t.committed("b-1")
+        assert t.schema["turn_idx"].dataType == T.IntegerType()
+        got = t.read()
+        assert got.count() == 50
+        assert got.select("conv_id", "turn_idx").distinct().count() == 50
+
+
 def test_packed_order_across_batches(spark, tmp_path):
     """Two changes to one key sharing an lsn but differing in seq_in_tx,
     arriving in different micro-batches: (lsn, seq) order must win."""
