@@ -82,11 +82,10 @@ _WIDENINGS = {
 }
 
 # manifest bounds: the manifest is rewritten per commit, so everything in it
-# must be O(buckets), never O(stream length). Full lineage lives in the
-# parquet lineage table (streaming/pipeline.py); full replay protection for
+# must be O(buckets), never O(stream length). The per-batch record lives in
+# the lineage table (streaming/pipeline.py); full replay protection for
 # numeric commit keys lives in the per-stream high-water mark.
 _KEYS_KEEP = 1024
-_LINEAGE_KEEP = 64
 
 # Manifest format version. Bumped when the on-disk meaning of stored fields
 # changes; opening a table written by an incompatible format raises instead
@@ -116,8 +115,9 @@ def _split_commit_key(key: str) -> tuple[str, int] | None:
 
 @dataclass
 class MergeResult:
-    """Per-merge lineage record (the reference's per-batch meters,
-    ProductionPipelineRunner.java:723-745)."""
+    """What one merge did (the reference's per-batch meters,
+    ProductionPipelineRunner.java:723-745); its fields are the core of the
+    pipeline's per-batch lineage row."""
 
     version: int
     commit_key: str | None
@@ -137,12 +137,6 @@ class MergeResult:
     # per-phase wall times (stats job / write job / obs / manifest) — the
     # reference's per-stage batch timers (ProductionPipelineRunner.java:723)
     phase_timings: dict = field(default_factory=dict)
-
-    def as_dict(self) -> dict:
-        d = dict(self.__dict__)
-        d.pop("bucket_stats", None)  # kept out of the manifest (size)
-        d.pop("phase_timings", None)
-        return d
 
 
 class LakeTable:
@@ -196,7 +190,6 @@ class LakeTable:
             "deltas": {},  # bucket(str) -> [relative paths] (MOR delta files)
             "committed_keys": [],  # bounded ring of the last _KEYS_KEEP keys
             "committed_hw": {},  # key-prefix -> max numeric suffix committed
-            "lineage": [],  # bounded tail; full history in the lineage table
         }
         cls._write_manifest(root, manifest)
         return cls(spark, root)
@@ -255,10 +248,6 @@ class LakeTable:
     @property
     def num_buckets(self) -> int:
         return self._manifest["num_buckets"]
-
-    @property
-    def lineage(self) -> list[dict]:
-        return list(self._manifest["lineage"])
 
     def committed(self, commit_key: str) -> bool:
         """O(1)-ish replay check: recent keys live in a bounded ring; keys
@@ -407,16 +396,18 @@ class LakeTable:
         return len(self._files_for(self._manifest, buckets, "deltas"))
 
     # ------------------------------------------------------ schema evolution
-    def evolve_schema(self, source_schema: T.StructType) -> list[str]:
+    def evolve_schema(self, source_schema: T.StructType) -> tuple[T.StructType, list[str]]:
         """Diff an incoming batch schema against the table schema; add new
-        columns and apply legal widenings. Returns the evolved column names.
-        A widening of a key column raises ``ValueError`` before the schema
-        changes: the bucket hash depends on the key's type.
+        columns and apply legal widenings. Returns the evolved schema and
+        the evolved column names; the table is not changed — the schema
+        lands with the commit that writes it, so a merge that fails leaves
+        the table's schema as it was. A widening of a key column raises
+        ``ValueError``: the bucket hash depends on the key's type.
 
         The HiveMetadataProcessor drift-detection + HiveMetastoreTarget
-        ALTER TABLE ADD COLUMNS flow (SURVEY.md §2.6), as in-place manifest
-        schema replacement — old files need no rewrite because reads go
-        through the current schema.
+        ALTER TABLE ADD COLUMNS flow (SURVEY.md §2.6), as manifest schema
+        replacement — old files need no rewrite because reads go through
+        the current schema.
         """
         current = {f.name: f for f in self.schema.fields}
         evolved: list[str] = []
@@ -446,8 +437,7 @@ class LakeTable:
         if evolved:
             # keep LSN column last for readability
             new_fields.sort(key=lambda x: x.name == LSN_COLUMN)
-            self._manifest["schema"] = T.StructType(new_fields).jsonValue()
-        return evolved
+        return T.StructType(new_fields), evolved
 
     # ---------------------------------------------------------------- merge
     def merge(
@@ -490,18 +480,15 @@ class LakeTable:
             t = now
 
         if commit_key is not None and self.committed(commit_key):
-            return MergeResult(
-                version=self.version, commit_key=commit_key, noop=True
-            )
+            return MergeResult(self.version, commit_key, mode, noop=True)
 
-        evolved: list[str] = []
+        schema, evolved = self.schema, []
         if evolve:
             payload_schema = T.StructType(
                 [source.schema[c] for c in payload_columns_of(source.schema)]
             )
-            evolved = self.evolve_schema(payload_schema)
+            schema, evolved = self.evolve_schema(payload_schema)
 
-        schema = self.schema
         keys = self.key_columns
         meta = (LSN_COLUMN, DELETED_COLUMN)
         data_cols = [f.name for f in schema.fields if f.name not in meta]
@@ -580,7 +567,7 @@ class LakeTable:
         ]
         if not touched:
             s.unpersist()
-            return MergeResult(version=self.version, commit_key=commit_key, noop=True)
+            return MergeResult(self.version, commit_key, mode, noop=True)
 
         # The batch as table rows: deletes become tombstones, which carry
         # the key's _lsn high-water mark, so a stale insert arriving in a
@@ -628,7 +615,7 @@ class LakeTable:
             bucket_stats=bucket_stats,
             phase_timings=timings,
         )
-        self._commit(new_version, new_files, touched, as_deltas=mode == "mor", res=res)
+        self._commit(new_version, new_files, touched, mode == "mor", commit_key, schema)
         mark("manifest")
         return res
 
@@ -660,12 +647,13 @@ class LakeTable:
         new_files: dict[str, list[str]],
         buckets: list[int],
         as_deltas: bool,
-        res: MergeResult | None = None,
+        commit_key: str | None = None,
+        schema: T.StructType | None = None,
     ) -> None:
         """Flip the manifest to ``new_version``. The new files either replace
         the base files of ``buckets`` and drop their deltas (COW merge,
         compaction) or are appended as their deltas (MOR merge). A merge
-        also records its commit key and lineage."""
+        also records its commit key and its (possibly evolved) schema."""
         files = dict(self._manifest["files"])
         deltas = {k: list(v) for k, v in self._manifest.get("deltas", {}).items()}
         for b in map(str, buckets):
@@ -674,13 +662,20 @@ class LakeTable:
             else:
                 files[b] = new_files.get(b, [])
                 deltas.pop(b, None)
-        manifest = dict(self._manifest, version=new_version, files=files, deltas=deltas)
-        if res is not None:
-            keys, hw = self._commit_bookkeeping(res.commit_key)
-            manifest["committed_keys"], manifest["committed_hw"] = keys, hw
-            manifest["lineage"] = (list(self._manifest["lineage"]) + [res.as_dict()])[
-                -_LINEAGE_KEEP:
-            ]
+        keys, hw = self._commit_bookkeeping(commit_key)
+        manifest = dict(
+            self._manifest,
+            version=new_version,
+            files=files,
+            deltas=deltas,
+            committed_keys=keys,
+            committed_hw=hw,
+        )
+        if schema is not None:
+            manifest["schema"] = schema.jsonValue()
+        # tables written before the lineage table held the per-batch record
+        # carry a "lineage" tail; it is dropped at their next commit
+        manifest.pop("lineage", None)
         self._write_manifest(self.path, manifest)
         self._manifest = manifest
 

@@ -31,6 +31,7 @@ validation issue codes.
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import re
 from typing import Any
@@ -199,7 +200,7 @@ def _connector_writer(typ: str, st: dict, src: Any):
                 commit_key=st.get("commit_key"),
                 mode="mor" if typ == "kudu_lake" else st.get("mode", "cow"),
             )
-            return res.as_dict()
+            return dataclasses.asdict(res)
     elif typ == "mongodb_target":
         def write():
             from datacollector_spark.sources.mongodb import (

@@ -31,10 +31,12 @@ class MultiTableCdcPipeline(CdcIngestPipeline):
     each table's slice to its own LakeTable exactly once.
 
     ``table_configs``: {src_table_name: {"table": LakeTable,
-    "project": Callable[[DataFrame], DataFrame] | None}} — ``project``
-    lifts the generic payload into that table's typed columns (e.g.
-    changelog_formats.project_transcript_payload); None keeps the batch
-    columns as-is.
+    "project": Callable[[DataFrame], DataFrame] | None, **kwargs}} —
+    ``project`` lifts the generic payload into that table's typed columns
+    (e.g. changelog_formats.project_transcript_payload); None keeps the
+    batch columns as-is. The other keys are that table's
+    :class:`CdcIngestPipeline` keyword arguments (``transforms``,
+    ``lineage_dir``, ``data_rules``, ``expire_keep``, ``merge_mode``, ...).
 
     The router is a CdcIngestPipeline with no table of its own: it inherits
     the stream drivers (source read, checkpoint, triggers) and replaces only
@@ -50,7 +52,6 @@ class MultiTableCdcPipeline(CdcIngestPipeline):
         checkpoint_dir: str,
         source_schema: T.StructType,
         max_files_per_trigger: int | None = None,
-        transforms=None,
     ):
         super().__init__(
             spark,
@@ -63,13 +64,9 @@ class MultiTableCdcPipeline(CdcIngestPipeline):
         self.table_configs = table_configs
         self.pipelines: dict[str, CdcIngestPipeline] = {}
         for name, cfg in table_configs.items():
+            kwargs = {k: v for k, v in cfg.items() if k not in ("table", "project")}
             pipe = CdcIngestPipeline(
-                spark,
-                source_dir,
-                cfg["table"],
-                checkpoint_dir,
-                source_schema,
-                transforms=transforms,
+                spark, source_dir, cfg["table"], checkpoint_dir, source_schema, **kwargs
             )
             pipe.stream_id = f"{self.stream_id}:{name}"
             self.pipelines[name] = pipe

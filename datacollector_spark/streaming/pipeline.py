@@ -25,42 +25,81 @@ the checkpoint, so the restart resumes losslessly.
 
 from __future__ import annotations
 
+import dataclasses
+import json
+import logging
+import os
 import time
+from dataclasses import dataclass
+from urllib.parse import quote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datacollector_spark.lake.table import _BUCKET_COL, LakeTable
+from datacollector_spark.lake.table import _BUCKET_COL, LakeTable, MergeResult
 from datacollector_spark.model import changelog_schema, payload_columns_of
 from datacollector_spark.operators.collapse import lww_collapse
 
+_log = logging.getLogger(__name__)
+
+# The per-batch record: one row per micro-batch, replays included. The
+# MergeResult fields in declaration order, then what the pipeline adds.
 LINEAGE_SCHEMA = T.StructType(
     [
         T.StructField("batch_id", T.LongType()),
+        T.StructField("version", T.LongType()),
         T.StructField("commit_key", T.StringType()),
-        T.StructField("table_version", T.LongType()),
-        T.StructField("bucket", T.IntegerType()),  # null => batch-level row
+        T.StructField("mode", T.StringType()),
+        T.StructField("noop", T.BooleanType()),
         T.StructField("rows_source", T.LongType()),
-        T.StructField("min_lsn", T.LongType()),
-        T.StructField("max_lsn", T.LongType()),
         T.StructField("rows_inserted", T.LongType()),
         T.StructField("rows_updated", T.LongType()),
         T.StructField("rows_deleted", T.LongType()),
         T.StructField("rows_lww_skipped", T.LongType()),
-        T.StructField("noop", T.BooleanType()),
+        T.StructField("buckets_touched", T.LongType()),
+        T.StructField("max_lsn", T.LongType()),
         T.StructField("evolved_columns", T.ArrayType(T.StringType())),
-        T.StructField("wall_s", T.DoubleType()),
+        # what the merge took in per bucket (offsets applied per partition)
+        T.StructField(
+            "bucket_stats",
+            T.ArrayType(
+                T.StructType(
+                    [
+                        T.StructField("bucket", T.IntegerType()),
+                        T.StructField("rows_source", T.LongType()),
+                        T.StructField("min_lsn", T.LongType()),
+                        T.StructField("max_lsn", T.LongType()),
+                    ]
+                )
+            ),
+        ),
         # per-stage timers (ProductionPipelineRunner.java:723-745 batch
         # processing timer, split by merge phase)
+        T.StructField("phase_timings", T.MapType(T.StringType(), T.DoubleType())),
+        T.StructField("wall_s", T.DoubleType()),
+        # the source files the batch applied (EventCreator.java:45's
+        # new-file/finished-file events: a file source delivers a file in
+        # exactly one micro-batch)
+        T.StructField("files", T.ArrayType(T.StringType())),
+        # the data rules that fired on the batch
         T.StructField(
-            "phase_timings", T.MapType(T.StringType(), T.DoubleType()), True
+            "alerts",
+            T.ArrayType(
+                T.StructType(
+                    [
+                        T.StructField("rule", T.StringType()),
+                        T.StructField("level", T.StringType()),
+                        T.StructField("count", T.LongType()),
+                        T.StructField("window_count", T.LongType()),
+                        T.StructField("window_batches", T.IntegerType()),
+                        T.StructField("sampling_pct", T.DoubleType()),
+                    ]
+                )
+            ),
         ),
     ]
 )
-
-
-from dataclasses import dataclass
 
 
 @dataclass
@@ -112,7 +151,6 @@ class CdcIngestPipeline:
         mor_compact_every: int | None = None,
         dedup_within: str | None = None,
         dedup_fields: list[str] | None = None,
-        file_events_dir: str | None = None,
     ):
         self.spark = spark
         self.source_dir = source_dir
@@ -132,10 +170,8 @@ class CdcIngestPipeline:
         self.late_dir = late_dir
         # Data rules (container/.../config/DataRuleDefinition.java:28-66 +
         # DataObserverRunner): SQL condition + threshold, evaluated per
-        # micro-batch; firings append alert dicts to the in-memory
-        # ``alerts`` list (nothing writes them to disk).
+        # micro-batch; firings go to the batch's lineage row.
         self.data_rules = data_rules or []
-        self.alerts: list[dict] = []
         # rolling per-rule match counts for moving-window meters (bounded:
         # each deque holds at most window_batches entries)
         from collections import deque
@@ -161,13 +197,6 @@ class CdcIngestPipeline:
         # LSN guard at the table catches anything beyond the window.
         self.dedup_within = dedup_within
         self.dedup_fields = dedup_fields or ["lsn", "seq_in_tx"]
-        # Stage lifecycle event records (EventCreator.java:45 — the spooler
-        # emits new-file / finished-file events): per micro-batch, the set
-        # of source files is captured by the SAME CollectMetrics node as the
-        # data rules (no extra pass); each file yields a new-file event when
-        # first seen and a finished-file event when its batch commits (file
-        # sources deliver a file in exactly one micro-batch).
-        self.file_events_dir = file_events_dir
         # Commit keys are namespaced by the checkpoint identity: stable
         # across RESTARTS of the same stream (exactly-once replay dedupe),
         # distinct across DIFFERENT streams into the same table.
@@ -184,14 +213,10 @@ class CdcIngestPipeline:
 
     # --------------------------------------------------- watermark durability
     def _watermark_path(self) -> str:
-        import os
-
         return os.path.join(self.checkpoint_dir, "dcs_watermark.json")
 
     def _load_watermark(self):
         import datetime as _dt
-        import json
-        import os
 
         try:
             with open(self._watermark_path()) as f:
@@ -201,9 +226,6 @@ class CdcIngestPipeline:
             return None
 
     def _save_watermark(self) -> None:
-        import json
-        import os
-
         if self._watermark is None:
             return
         os.makedirs(self.checkpoint_dir, exist_ok=True)
@@ -223,43 +245,43 @@ class CdcIngestPipeline:
             df = df.dropDuplicatesWithinWatermark(self.dedup_fields)
         return df
 
-    def _write_lineage(self, rows: list[dict]) -> None:
-        """Append one micro-batch's lineage rows as one parquet file, at the
-        batch's commit (lineage is observability: table correctness never
-        depends on it)."""
+    def _record(
+        self, batch_id: int, res: MergeResult, t0: float, files=(), alerts=()
+    ) -> None:
+        """Write the batch's one record: the merge's fields plus the batch
+        id, wall time, source files and rule firings. It is logged as one
+        JSON line at INFO and, with ``lineage_dir``, appended as one parquet
+        file (lineage is observability: table correctness never depends on
+        it)."""
+        row = {
+            "batch_id": batch_id,
+            **dataclasses.asdict(res),
+            "wall_s": time.time() - t0,
+            "files": list(files),
+            "alerts": list(alerts),
+        }
+        _log.info(json.dumps(row))
         if not self.lineage_dir:
             return
-        # Driver-direct parquet append (pyarrow), not a Spark job: lineage is
-        # a few dozen metadata rows per batch, but createDataFrame + a
-        # 1-task write job costs seconds of job-scheduling/committer overhead
-        # per write (measured 5.9 s at the end of a 28 s ingest run — guide
-        # §5: the driver should do almost no data work, and conversely tiny
-        # metadata should not be pushed through the cluster machinery).
-        # The Arrow schema is derived from LINEAGE_SCHEMA (incl. the
-        # map<string,double> phase timings), so Spark reads the directory
-        # back with exactly that schema.
-        import uuid as _uuid
+        # Driver-direct parquet append (pyarrow), not a Spark job: the record
+        # is one metadata row per batch, but createDataFrame + a 1-task write
+        # job costs seconds of job-scheduling/committer overhead per write
+        # (measured 5.9 s at the end of a 28 s ingest run — guide §5: the
+        # driver should do almost no data work, and conversely tiny metadata
+        # should not be pushed through the cluster machinery). The Arrow
+        # schema is derived from LINEAGE_SCHEMA, so Spark reads the
+        # directory back with exactly that schema.
+        import uuid
 
-        import pyarrow as _pa
-        import pyarrow.parquet as _pq
+        import pyarrow as pa
+        import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        arrow_schema = to_arrow_schema(LINEAGE_SCHEMA)
-        cols = []
-        for f in arrow_schema:
-            vals = [r.get(f.name) for r in rows]
-            if f.name == "phase_timings":
-                vals = [
-                    sorted(v.items()) if isinstance(v, dict) else v for v in vals
-                ]
-            cols.append(_pa.array(vals, type=f.type))
-        table = _pa.Table.from_arrays(cols, schema=arrow_schema)
-        import os
-
+        table = pa.Table.from_pylist([row], schema=to_arrow_schema(LINEAGE_SCHEMA))
         os.makedirs(self.lineage_dir, exist_ok=True)
-        name = f"part-{_uuid.uuid4().hex}.snappy.parquet"
+        name = f"part-{uuid.uuid4().hex}.snappy.parquet"
         tmp = os.path.join(self.lineage_dir, "." + name + ".tmp")
-        _pq.write_table(table, tmp, compression="snappy")
+        pq.write_table(table, tmp, compression="snappy")
         os.replace(tmp, os.path.join(self.lineage_dir, name))
 
     # ----------------------------------------------------------- the batch
@@ -271,29 +293,25 @@ class CdcIngestPipeline:
         if self.table.committed(commit_key):
             # replayed after a crash that hit AFTER table commit but BEFORE
             # the checkpoint advanced — the exactly-once window
-            self._write_lineage(
-                [
-                    {
-                        "batch_id": batch_id,
-                        "commit_key": commit_key,
-                        "table_version": self.table.version,
-                        "noop": True,
-                        "wall_s": time.time() - t0,
-                    }
-                ]
-            )
+            res = MergeResult(self.table.version, commit_key, self.merge_mode, noop=True)
+            self._record(batch_id, res, t0)
             return
 
         df = batch_df
 
-        # ---- observer: data rules + event-time high-water mark, one
-        # CollectMetrics node evaluated inside the collapse job (no extra
-        # pass; only attached when a feature needs it)
+        # ---- observer: data rules, event-time high-water mark and source
+        # files, one CollectMetrics node evaluated inside the collapse job
+        # (no extra pass; only attached when a feature needs it)
         obs = None
-        if self.data_rules or self.late_limit_s is not None or self.file_events_dir:
+        if self.data_rules or self.late_limit_s is not None or self.lineage_dir:
             from pyspark.sql import Observation
 
-            metrics = [F.max("commit_ts").alias("_max_ts")]
+            # input_file_name is nondeterministic — illegal directly inside
+            # CollectMetrics; project it, aggregate the column
+            df = df.withColumn("_source_file", F.input_file_name())
+            metrics = [F.collect_set("_source_file").alias("_files")]
+            if self.late_limit_s is not None:
+                metrics.append(F.max("commit_ts").alias("_max_ts"))
             sampled = any(r.sampling_pct < 1.0 for r in self.data_rules)
             if sampled:
                 # rand() is nondeterministic — illegal directly inside
@@ -306,15 +324,8 @@ class CdcIngestPipeline:
                 metrics.append(
                     F.sum(F.when(cond, 1).otherwise(0)).alias(f"_rule_{i}")
                 )
-            if self.file_events_dir:
-                # input_file_name is nondeterministic — illegal directly
-                # inside CollectMetrics; project it, aggregate the column
-                df = df.withColumn("_source_file", F.input_file_name())
-                metrics.append(F.collect_set("_source_file").alias("_files"))
             obs = Observation(f"rules-{batch_id}")
-            df = df.observe(obs, *metrics)
-            if self.file_events_dir:
-                df = df.drop("_source_file")
+            df = df.observe(obs, *metrics).drop("_source_file")
             if sampled:
                 df = df.drop("_sample_u")
 
@@ -325,7 +336,10 @@ class CdcIngestPipeline:
         if self.late_limit_s is not None and watermark is not None:
             late = df.where(F.col("commit_ts") < F.lit(watermark))
             if self.late_dir:
-                late.write.mode("append").parquet(self.late_dir)
+                # one partition per batch, overwritten: a batch replayed
+                # after a crash before its commit lands its late rows once
+                part = f"commit_key={quote(commit_key, safe='')}"
+                late.write.mode("overwrite").parquet(os.path.join(self.late_dir, part))
             df = df.where(
                 F.col("commit_ts").isNull() | (F.col("commit_ts") >= F.lit(watermark))
             )
@@ -363,6 +377,8 @@ class CdcIngestPipeline:
         ):
             self.table.compact_deltas()
 
+        files: list[str] = []
+        alerts: list[dict] = []
         if obs is not None:
             m = obs.get
             max_ts = m.get("_max_ts")
@@ -378,56 +394,20 @@ class CdcIngestPipeline:
                 self._rule_windows[i].append(n)
                 windowed = sum(self._rule_windows[i])
                 if windowed >= rule.min_count:
-                    alert = {
-                        "batch_id": batch_id,
-                        "rule": rule.name,
-                        "level": rule.level,
-                        "count": n,
-                    }
-                    if rule.window_batches > 1:
-                        alert["window_count"] = windowed
-                        alert["window_batches"] = rule.window_batches
-                    if rule.sampling_pct < 1.0:
-                        alert["sampling_pct"] = rule.sampling_pct
-                    self.alerts.append(alert)
-            if self.file_events_dir and m.get("_files"):
-                rows = [
-                    (batch_id, f, ev)
-                    for f in sorted(m["_files"])
-                    for ev in ("new-file", "finished-file")
-                ]
-                self.spark.createDataFrame(
-                    rows, "batch_id long, file string, event string"
-                ).coalesce(1).write.mode("append").parquet(self.file_events_dir)
+                    alerts.append(
+                        {
+                            "rule": rule.name,
+                            "level": rule.level,
+                            "count": n,
+                            "window_count": windowed,
+                            "window_batches": rule.window_batches,
+                            "sampling_pct": rule.sampling_pct,
+                        }
+                    )
+            # a batch read from a cache (a multi-table slice) has no file
+            files = sorted(f for f in m["_files"] if f)
 
-        per_bucket = [
-            {
-                "batch_id": batch_id,
-                "commit_key": commit_key,
-                "table_version": res.version,
-                "bucket": b["bucket"],
-                "rows_source": b["rows_source"],
-                "min_lsn": b["min_lsn"],
-                "max_lsn": b["max_lsn"],
-            }
-            for b in res.bucket_stats
-        ]
-        batch_row = {
-            "batch_id": batch_id,
-            "commit_key": commit_key,
-            "table_version": res.version,
-            "rows_source": res.rows_source,
-            "max_lsn": res.max_lsn,
-            "rows_inserted": res.rows_inserted,
-            "rows_updated": res.rows_updated,
-            "rows_deleted": res.rows_deleted,
-            "rows_lww_skipped": res.rows_lww_skipped,
-            "noop": res.noop,
-            "evolved_columns": res.evolved_columns,
-            "wall_s": time.time() - t0,
-            "phase_timings": res.phase_timings or None,
-        }
-        self._write_lineage([batch_row] + per_bucket)
+        self._record(batch_id, res, t0, files, alerts)
         if self.expire_keep is not None and not res.noop:
             self.table.expire_snapshots(keep_last=self.expire_keep)
         self.batches_applied += 1

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import logging
 import os
 import time
 
@@ -97,6 +98,9 @@ def main() -> None:
                     help="tail cycles to run; 0 = loop forever")
     ap.add_argument("--poll-interval", type=float, default=5.0)
     args = ap.parse_args()
+    # each micro-batch's lineage record, as one JSON log line
+    logging.basicConfig(format="%(message)s")
+    logging.getLogger("datacollector_spark").setLevel(logging.INFO)
 
     from pyspark.sql import SparkSession
 

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import logging
 import os
 
 
@@ -48,6 +49,9 @@ def main() -> None:
     ap.add_argument("--late-dir", default=None)
     ap.add_argument("--dedup-within", default=None, metavar="'10 minutes'")
     args = ap.parse_args()
+    # each micro-batch's lineage record, as one JSON log line
+    logging.basicConfig(format="%(message)s")
+    logging.getLogger("datacollector_spark").setLevel(logging.INFO)
 
     from pyspark.sql import SparkSession
 

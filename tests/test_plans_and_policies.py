@@ -123,6 +123,7 @@ def test_late_records_split_and_rules(spark, tmp_path):
         late_dir=late_dir,
         data_rules=[DataRule("inserts", "op = 1", min_count=1)],
         max_files_per_trigger=1,
+        lineage_dir=str(tmp_path / "lineage"),
     )
     pipe2._watermark = t0 + dt.timedelta(seconds=1000 - 3600)
     pipe2.run_available_now(timeout_s=120)
@@ -131,7 +132,63 @@ def test_late_records_split_and_rules(spark, tmp_path):
     assert "too-late" not in set(final["text"])
     late = spark.read.parquet(late_dir).toPandas()
     assert set(late["text"]) == {"too-late"}
-    assert any(a["rule"] == "inserts" for a in pipe2.alerts)
+    # the rule fired in the batch's lineage row; rules see the whole batch,
+    # its late row included
+    (row,) = spark.read.parquet(str(tmp_path / "lineage")).collect()
+    assert [(a["rule"], a["level"], a["count"]) for a in row["alerts"]] == [
+        ("inserts", "warn", 2)
+    ]
+
+
+def test_late_rows_land_once_across_a_failed_merge(spark, tmp_path):
+    """A batch whose merge fails after its late rows were written replays
+    on restart; its late rows land once, not once per attempt."""
+    t0 = dt.datetime(2025, 1, 1, 12, 0, 0)
+
+    def row(lsn, ts_off, turn, text="x"):
+        ts = t0 + dt.timedelta(seconds=ts_off)
+        return (1, lsn, 0, ts, "c1", turn, "user", text, None, ts)
+
+    src = str(tmp_path / "seg")
+    b1 = _mk_changelog_df(spark, [row(1, 0, 0), row(2, 1000, 1)])
+    b1.coalesce(1).write.mode("append").parquet(src)
+    table = LakeTable.create(
+        spark, str(tmp_path / "t"), transcripts_schema(), KEY_COLUMNS, num_buckets=4
+    )
+    late_dir = str(tmp_path / "late")
+
+    def mk():
+        return CdcIngestPipeline(
+            spark,
+            src,
+            table,
+            str(tmp_path / "ckpt"),
+            source_schema=b1.schema,
+            late_limit_s=3600,
+            late_dir=late_dir,
+            max_files_per_trigger=1,
+        )
+
+    mk().run_available_now(timeout_s=120)
+    b2 = [row(3, 1010, 2), row(4, -5000, 3, text="too-late")]
+    _mk_changelog_df(spark, b2).coalesce(1).write.mode("append").parquet(src)
+    pipe = mk()
+    merge = table.merge
+
+    def fail_once(*args, **kwargs):
+        table.merge = merge
+        raise RuntimeError("injected merge failure after the late write")
+
+    table.merge = fail_once
+    with pytest.raises(Exception):
+        pipe.run_available_now(timeout_s=120)
+    assert table.merge == merge
+    mk().run_available_now(timeout_s=120)
+    assert sorted(r["text"] for r in table.refresh().read().collect()) == ["x"] * 3
+    late = spark.read.parquet(late_dir).collect()
+    assert [r["text"] for r in late] == ["too-late"]
+    # the late output is partitioned by the commit key of its batch
+    assert late[0]["commit_key"] == f"{pipe.stream_id}:microbatch-1"
 
 
 def test_spark_submit_py_files_launch(spark, tmp_path):
@@ -197,6 +254,11 @@ def test_spark_submit_py_files_launch(spark, tmp_path):
 
     res = json.loads(line[0][len("PIPELINE_RESULT "):])
     assert res["rows"] > 0 and res["batches"] >= 1
+    # each batch's lineage record is logged as one JSON line
+    out = (proc.stdout + proc.stderr).splitlines()
+    records = [json.loads(l) for l in out if l.startswith('{"batch_id"')]
+    assert len(records) == res["batches"]
+    assert sum(r["rows_source"] for r in records) > 0
 
 
 def test_run_pipeline_rejects_counts_below_one(tmp_path):

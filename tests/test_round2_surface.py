@@ -1,5 +1,5 @@
-"""Round-2 surface additions: file-tail rolling patterns, file lifecycle
-events, recursive flattener, planted-duplicate embedding dedup."""
+"""Round-2 surface additions: file-tail rolling patterns, per-batch source
+files, recursive flattener, planted-duplicate embedding dedup."""
 
 from __future__ import annotations
 
@@ -46,7 +46,9 @@ def test_file_tail_rolling_pattern(spark, tmp_path):
 
 
 def test_file_lifecycle_events(spark, tmp_path):
-    """Per-file new-file/finished-file event records (EventCreator analog)."""
+    """The lineage row of each applied batch names the one source file it
+    applied (EventCreator's new-file/finished-file events, folded into the
+    per-batch record)."""
     from datacollector_spark.model import changelog_schema
     from datacollector_spark.streaming import CdcIngestPipeline
     import datetime
@@ -67,21 +69,21 @@ def test_file_lifecycle_events(spark, tmp_path):
     table = LakeTable.create(
         spark, str(tmp_path / "t"), transcripts_schema(), KEY_COLUMNS, num_buckets=2
     )
-    events_dir = str(tmp_path / "events")
+    lineage = str(tmp_path / "lineage")
     pipe = CdcIngestPipeline(
         spark,
         seg,
         table,
         str(tmp_path / "ckpt"),
         max_files_per_trigger=1,
-        file_events_dir=events_dir,
+        lineage_dir=lineage,
     )
     pipe.run_available_now(timeout_s=300)
-    ev = spark.read.parquet(events_dir).toPandas()
-    assert set(ev["event"]) == {"new-file", "finished-file"}
-    assert ev["file"].nunique() == 2  # one pair per source file
-    assert len(ev) == 4
-    assert ev["batch_id"].nunique() == 2
+    rows = spark.read.parquet(lineage).orderBy("batch_id").collect()
+    assert [r["batch_id"] for r in rows] == [0, 1]
+    assert all(len(r["files"]) == 1 for r in rows)
+    segs = {f for f in os.listdir(seg) if f.endswith(".parquet")}
+    assert {os.path.basename(r["files"][0]) for r in rows} == segs
 
 
 def test_field_flattener_recursive(spark):
@@ -232,12 +234,14 @@ def test_multitable_cdc_routes_and_merges(spark, tmp_path):
     def proj_m(df):
         return df.select("op", "lsn", "seq_in_tx", "metric_id", "value")
 
+    lineage = str(tmp_path / "lineage")
+
     def mk():
         return MultiTableCdcPipeline(
             spark,
             seg,
             {
-                "transcripts": {"table": t_tab, "project": proj_t},
+                "transcripts": {"table": t_tab, "project": proj_t, "lineage_dir": lineage},
                 "metrics": {"table": m_tab, "project": proj_m},
             },
             str(tmp_path / "ckpt"),
@@ -263,3 +267,7 @@ def test_multitable_cdc_routes_and_merges(spark, tmp_path):
     v_t, v_m = t_tab.version, m_tab.version
     mk().run_available_now(timeout_s=300)
     assert (t_tab.version, m_tab.version) == (v_t, v_m)
+    # the table's lineage rows carry its own commit keys
+    rows = spark.read.parquet(lineage).collect()
+    assert [r["rows_source"] for r in rows] == [1]
+    assert all(f"{sid}:transcripts:microbatch-" in r["commit_key"] for r in rows)

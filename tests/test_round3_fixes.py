@@ -215,6 +215,25 @@ def test_manifest_format_version_refused(spark, tmp_path):
         LakeTable(spark, table.path)
 
 
+def test_manifest_with_lineage_tail_still_opens(spark, tmp_path):
+    """A table whose manifest still carries the in-manifest lineage tail of
+    earlier engines opens and merges with no format change; its next
+    commit drops the tail (the lineage table holds the per-batch record)."""
+    import os
+
+    table = _table(spark, tmp_path)
+    mpath = os.path.join(table.path, "_manifests", "v0000000000.json")
+    with open(mpath) as f:
+        manifest = json.load(f)
+    manifest["lineage"] = [{"version": 0, "commit_key": "old", "noop": False}]
+    with open(mpath, "w") as f:
+        json.dump(manifest, f)
+    reopened = LakeTable(spark, table.path)
+    res = reopened.merge(_batch(spark, [(1, 1, 0, "c1", 0, "hi")]), commit_key="b-0")
+    assert res.version == 1 and reopened.read().count() == 1
+    assert "lineage" not in reopened._load_manifest(1)
+
+
 # -------------------------------------------------- deterministic record dedup
 def test_record_dedup_deterministic_across_layouts(spark):
     """Winner choice must not depend on partition layout (the old

@@ -108,12 +108,14 @@ def test_data_rule_sampling_pct(spark, tmp_path):
             DataRule("all-sampled", "op >= 1", min_count=1, sampling_pct=0.5),
             DataRule("all-full", "op >= 1", min_count=1),
         ],
+        lineage_dir=str(tmp_path / "lineage"),
     )
     pipe.apply_batch(batch, batch_id=0)
-    counts = {a["rule"]: a["count"] for a in pipe.alerts}
+    (row,) = spark.read.parquet(str(tmp_path / "lineage")).collect()
+    counts = {a["rule"]: a["count"] for a in row["alerts"]}
     assert counts["all-full"] == n
     assert 0.35 * n < counts["all-sampled"] < 0.65 * n
-    assert {a["rule"]: a.get("sampling_pct") for a in pipe.alerts}["all-sampled"] == 0.5
+    assert {a["rule"]: a["sampling_pct"] for a in row["alerts"]}["all-sampled"] == 0.5
 
 
 def test_data_rule_moving_window_meter(spark, tmp_path):
@@ -143,10 +145,12 @@ def test_data_rule_moving_window_meter(spark, tmp_path):
         table,
         str(tmp_path / "ckpt"),
         data_rules=[DataRule("drip", "op = 2", min_count=threshold, window_batches=3)],
+        lineage_dir=str(tmp_path / "lineage"),
     )
     for i, b in enumerate(batches):
         pipe.apply_batch(b, batch_id=i)
-    drip = [a for a in pipe.alerts if a["rule"] == "drip"]
+    rows = spark.read.parquet(str(tmp_path / "lineage")).orderBy("batch_id").collect()
+    drip = [a for r in rows for a in r["alerts"] if a["rule"] == "drip"]
     assert len(drip) >= 1  # no single batch reaches min_count; the window does
     assert drip[0]["window_count"] >= threshold and drip[0]["window_batches"] == 3
 

@@ -3,6 +3,10 @@ exactly-once, and mid-stream schema evolution (FIXTURES.md F5)."""
 
 from __future__ import annotations
 
+import json
+import logging
+import os
+
 import pandas as pd
 import pytest
 from pandas.testing import assert_frame_equal
@@ -60,15 +64,44 @@ def test_available_now_drain_matches_oracle(spark, seg_data, tmp_path):
     pipe.run_available_now(timeout_s=300)
     assert pipe.batches_applied >= 3  # really micro-batched, not one gulp
     assert_frame_equal(_final(table.refresh()), oracle, check_dtype=False)
-    # lineage written: batch rows + per-bucket rows
+    # the per-batch record: one lineage row per micro-batch, carrying the
+    # bucket stats and the source files it applied
     lin = spark.read.parquet(str(tmp_path / "lineage"))
     assert lin.schema == LINEAGE_SCHEMA
-    assert lin.where(F.col("bucket").isNull()).count() == pipe.batches_applied
-    assert lin.where(F.col("bucket").isNotNull()).count() > 0
-    total_src = (
-        lin.where(F.col("bucket").isNull()).agg(F.sum("rows_source")).collect()[0][0]
+    rows = [r.asDict(recursive=True) for r in lin.collect()]
+    assert len(rows) == pipe.batches_applied
+    for r in rows:
+        assert list(r) == LINEAGE_SCHEMA.names
+        assert sum(b["rows_source"] for b in r["bucket_stats"]) == r["rows_source"] > 0
+    applied = [os.path.basename(f) for r in rows if not r["noop"] for f in r["files"]]
+    assert sorted(applied) == sorted(f for f in os.listdir(src) if f.endswith(".parquet"))
+
+
+def test_batch_record_logged_as_json(spark, tmp_path, caplog):
+    """Each micro-batch, a replay included, logs its record as one JSON
+    line at INFO — the same fields the lineage table stores."""
+    table = LakeTable.create(
+        spark, str(tmp_path / "t"), transcripts_schema(), KEY_COLUMNS, num_buckets=4
     )
-    assert total_src > 0
+    lineage = str(tmp_path / "lineage")
+    pipe = CdcIngestPipeline(
+        spark, str(tmp_path / "src"), table, str(tmp_path / "ckpt"), lineage_dir=lineage
+    )
+    ddl = "op int, lsn long, seq_in_tx int, conv_id string, turn_idx int, text string"
+    batch = spark.createDataFrame([(0, i, 0, f"c{i}", 0, "x") for i in range(5)], ddl)
+    caplog.set_level(logging.INFO, logger="datacollector_spark.streaming.pipeline")
+    pipe.apply_batch(batch, 0)
+    pipe.apply_batch(batch, 0)  # replay: a noop row
+    logged = [
+        json.loads(r.getMessage())
+        for r in caplog.records
+        if r.name == "datacollector_spark.streaming.pipeline"
+    ]
+    assert [list(d) for d in logged] == [LINEAGE_SCHEMA.names] * 2
+    assert [d["noop"] for d in logged] == [False, True]
+    assert logged[0]["rows_inserted"] == 5 and logged[0]["version"] == 1
+    stored = [r.asDict(recursive=True) for r in spark.read.parquet(lineage).collect()]
+    assert sorted(stored, key=lambda d: d["noop"]) == logged
 
 
 class _Boom(Exception):
@@ -86,23 +119,32 @@ def test_kill_restart_exactly_once(spark, seg_data, tmp_path):
     )
     ckpt = str(tmp_path / "ckpt")
 
+    lineage = str(tmp_path / "lineage")
+    crashed = []
+
     def bomb(pipe, batch_id):
         if pipe.batches_applied == 2:
+            crashed.append(batch_id)
             raise _Boom("injected crash after commit, before checkpoint")
 
-    pipe = CdcIngestPipeline(spark, src, table, ckpt, max_files_per_trigger=3)
+    pipe = CdcIngestPipeline(
+        spark, src, table, ckpt, max_files_per_trigger=3, lineage_dir=lineage
+    )
     pipe.on_batch_applied = bomb
     with pytest.raises(Exception):
         pipe.run_available_now(timeout_s=300)
-    v_after_crash = table.refresh().version
-    assert v_after_crash >= 2
+    assert table.refresh().version >= 2
 
-    pipe2 = CdcIngestPipeline(spark, src, table.refresh(), ckpt, max_files_per_trigger=3)
+    pipe2 = CdcIngestPipeline(
+        spark, src, table, ckpt, max_files_per_trigger=3, lineage_dir=lineage
+    )
     pipe2.run_available_now(timeout_s=300)
-    # the replayed micro-batch must not have produced a new snapshot beyond
-    # its original commit: committed_keys dedupe turned it into a noop
-    lineage = table.refresh().lineage
-    assert any(e["noop"] for e in lineage) or table.version > v_after_crash
+    # the crashed batch replayed once, as a noop: its commit key had landed
+    rows = spark.read.parquet(lineage).collect()
+    assert [r["batch_id"] for r in rows if r["noop"]] == crashed
+    applied = [r["commit_key"] for r in rows if not r["noop"]]
+    assert len(applied) == len(set(applied)) >= 3
+    assert all(table.refresh().committed(k) for k in applied)
     assert_frame_equal(_final(table), oracle, check_dtype=False)
 
 
@@ -265,21 +307,22 @@ def test_kill_restart_exactly_once_mor(spark, seg_data, tmp_path):
 
 def test_apply_batch_job_count_and_one_file_per_bucket(spark, seg_data, tmp_path):
     """A micro-batch is bucket-partitioned once, before its collapse, and
-    the collapse, cache, stats, join and write all reuse that exchange.
+    the collapse, cache, stats, fold and write all reuse that exchange.
     Pinned through the status tracker: at most 4 Spark jobs onto an empty
-    table and 5 with a target (one exchange more per batch costs a job).
+    table and 5 with a target (one exchange more per batch costs a job),
+    with the lineage record on: its observer and row add no job.
     With 16 buckets over 4 shuffle partitions every bucket still lands
     whole in one task, so each committed version holds one file per
     bucket; the table matches the oracle."""
-    import os
-
     src, oracle, _ = seg_data
     segs = sorted(f for f in os.listdir(src) if f.endswith(".parquet"))
     halves = [segs[: len(segs) // 2], segs[len(segs) // 2 :]]
     table = LakeTable.create(
         spark, str(tmp_path / "t"), transcripts_schema(), KEY_COLUMNS, num_buckets=16
     )
-    pipe = CdcIngestPipeline(spark, src, table, str(tmp_path / "ckpt"))
+    pipe = CdcIngestPipeline(
+        spark, src, table, str(tmp_path / "ckpt"), lineage_dir=str(tmp_path / "lineage")
+    )
     sc = spark.sparkContext
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
@@ -299,6 +342,7 @@ def test_apply_batch_job_count_and_one_file_per_bucket(spark, seg_data, tmp_path
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert jobs[0] <= 4 and jobs[1] <= 5, jobs
+    assert spark.read.parquet(str(tmp_path / "lineage")).count() == 2
     for version in (1, 2):
         files = table._load_manifest(version)["files"]
         assert len(files) == 16

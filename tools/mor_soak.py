@@ -151,16 +151,11 @@ def main() -> None:
         result["batches_after_restart"] = p2.batches_applied
 
         # ---- lineage: replay no-op + steady throughput
-        lin = (
-            spark.read.parquet(lineage_dir)
-            .where("bucket IS NULL")
-            .orderBy("batch_id")
-            .collect()
-        )
+        lin = spark.read.parquet(lineage_dir).orderBy("batch_id").collect()
         noop_replays = [int(r["batch_id"]) for r in lin if r["noop"]]
         result["replayed_batches_nooped"] = noop_replays
         walls = [float(r["wall_s"]) for r in lin if not r["noop"]]
-        rows = [int(r["rows_source"] or 0) for r in lin if not r["noop"]]
+        rows = [r["rows_source"] for r in lin if not r["noop"]]
         result["batch_walls"] = [round(w, 1) for w in walls]
         # steady state: drop the first (warmup) batch of each run
         result["ingest_wall_s"] = round(ingest_wall, 1)
