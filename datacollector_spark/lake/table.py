@@ -130,6 +130,7 @@ class MergeResult:
     rows_lww_skipped: int = 0  # stale source rows rejected by the lsn guard
     buckets_touched: int = 0
     max_lsn: int | None = None
+    max_commit_ts: int | None = None  # epoch microseconds
     evolved_columns: list[str] = field(default_factory=list)
     # per-bucket source stats (offsets applied per partition) — computed in
     # the same job that discovers touched buckets, free for lineage
@@ -190,6 +191,7 @@ class LakeTable:
             "deltas": {},  # bucket(str) -> [relative paths] (MOR delta files)
             "committed_keys": [],  # bounded ring of the last _KEYS_KEEP keys
             "committed_hw": {},  # key-prefix -> max numeric suffix committed
+            "committed_ts": {},  # key-prefix -> max commit_ts applied (epoch µs)
         }
         cls._write_manifest(root, manifest)
         return cls(spark, root)
@@ -262,17 +264,11 @@ class LakeTable:
                 return True
         return commit_key in self._manifest["committed_keys"]
 
-    def _commit_bookkeeping(self, commit_key: str | None) -> tuple[list, dict]:
-        """New (committed_keys ring, committed_hw) after recording a key."""
-        keys = list(self._manifest["committed_keys"])
-        hw = dict(self._manifest.get("committed_hw", {}))
-        if commit_key is not None:
-            keys = (keys + [commit_key])[-_KEYS_KEEP:]
-            parsed = _split_commit_key(commit_key)
-            if parsed is not None:
-                prefix, n = parsed
-                hw[prefix] = max(hw.get(prefix, -1), n)
-        return keys, hw
+    def max_commit_ts(self, commit_key: str) -> int | None:
+        """The latest commit_ts (epoch µs) committed by the stream of
+        ``commit_key``: its late-record high-water mark."""
+        parsed = _split_commit_key(commit_key)
+        return self._manifest.get("committed_ts", {}).get(parsed[0]) if parsed else None
 
     def bucket_expr(self, *key_cols: str):
         """bucket(N, key) — same role as Iceberg's bucket transform. Table
@@ -458,8 +454,8 @@ class LakeTable:
         mode='mor': merge-on-read — the batch is APPENDED as bucketed delta
         files (no rewrite; ingest cost ∝ batch size only). Reads
         reconstruct via the same fold over base+deltas; call
-        :meth:`compact_deltas` (or let the pipeline do it every K batches)
-        to fold deltas into the base. This is the Iceberg-v2 / Hudi MOR
+        :meth:`compact_deltas` (the pipeline does after each merge) to
+        fold deltas into the base. This is the Iceberg-v2 / Hudi MOR
         shape — the ingest mode for 10^10-event scale, where rewriting the
         table per micro-batch is the bottleneck.
 
@@ -526,6 +522,9 @@ class LakeTable:
             )
         else:
             order_expr = F.col("lsn").cast("long")
+        # epoch microseconds: no session-timezone round trip
+        has_ts = "commit_ts" in source.columns
+        commit_us = (F.unix_micros("commit_ts") if has_ts else F.lit(None)).alias("_commit_us")
         # Bucket-partition the batch before it is persisted: the stats
         # aggregate groups by the bucket, the fold partitions by it and the
         # writer lays files out by it, so one exchange into
@@ -538,7 +537,7 @@ class LakeTable:
         bucket = [F.col(_BUCKET_COL)] if _BUCKET_COL in source.columns else []
         s = self.partition_by_bucket(
             source.select(
-                F.col("op"), F.col("lsn"), order_expr.alias("_ord"), *norm_cols, *bucket
+                F.col("op"), F.col("lsn"), order_expr.alias("_ord"), commit_us, *norm_cols, *bucket
             )
         ).persist()
 
@@ -551,6 +550,7 @@ class LakeTable:
                 F.count(F.lit(1)).alias("rows"),
                 F.min("lsn").alias("min_lsn"),
                 F.max("lsn").alias("max_lsn"),
+                F.max("_commit_us").alias("max_commit_us"),
             )
             .collect()
         )
@@ -600,6 +600,9 @@ class LakeTable:
         mark("obs_get")
         s.unpersist()
 
+        max_commit_ts = max(
+            (r["max_commit_us"] for r in stats_rows if r["max_commit_us"] is not None), default=None
+        )
         res = MergeResult(
             version=new_version,
             commit_key=commit_key,
@@ -611,11 +614,14 @@ class LakeTable:
             rows_lww_skipped=int(m["stale"] or 0),
             buckets_touched=len(touched),
             max_lsn=max(b["max_lsn"] for b in bucket_stats),
+            max_commit_ts=max_commit_ts,
             evolved_columns=evolved,
             bucket_stats=bucket_stats,
             phase_timings=timings,
         )
-        self._commit(new_version, new_files, touched, mode == "mor", commit_key, schema)
+        self._commit(
+            new_version, new_files, touched, mode == "mor", commit_key, schema, max_commit_ts
+        )
         mark("manifest")
         return res
 
@@ -649,11 +655,12 @@ class LakeTable:
         as_deltas: bool,
         commit_key: str | None = None,
         schema: T.StructType | None = None,
+        max_commit_ts: int | None = None,
     ) -> None:
         """Flip the manifest to ``new_version``. The new files either replace
         the base files of ``buckets`` and drop their deltas (COW merge,
         compaction) or are appended as their deltas (MOR merge). A merge
-        also records its commit key and its (possibly evolved) schema."""
+        also records its commit key, latest commit_ts and schema."""
         files = dict(self._manifest["files"])
         deltas = {k: list(v) for k, v in self._manifest.get("deltas", {}).items()}
         for b in map(str, buckets):
@@ -662,7 +669,17 @@ class LakeTable:
             else:
                 files[b] = new_files.get(b, [])
                 deltas.pop(b, None)
-        keys, hw = self._commit_bookkeeping(commit_key)
+        keys = list(self._manifest["committed_keys"])
+        hw = dict(self._manifest.get("committed_hw", {}))
+        ts = dict(self._manifest.get("committed_ts", {}))
+        if commit_key is not None:
+            keys = (keys + [commit_key])[-_KEYS_KEEP:]
+            parsed = _split_commit_key(commit_key)
+            if parsed is not None:
+                prefix, n = parsed
+                hw[prefix] = max(hw.get(prefix, -1), n)
+                if max_commit_ts is not None:
+                    ts[prefix] = max(ts.get(prefix, max_commit_ts), max_commit_ts)
         manifest = dict(
             self._manifest,
             version=new_version,
@@ -670,6 +687,7 @@ class LakeTable:
             deltas=deltas,
             committed_keys=keys,
             committed_hw=hw,
+            committed_ts=ts,
         )
         if schema is not None:
             manifest["schema"] = schema.jsonValue()
@@ -690,16 +708,16 @@ class LakeTable:
         self._commit(new_version, new_files, buckets, as_deltas=False)
         return len(buckets)
 
-    def compact_deltas(self, buckets: list[int] | None = None) -> int:
+    def compact_deltas(self, min_files: int = 1) -> int:
         """Fold MOR delta files into base files (Iceberg rewrite of v2
-        deletes / Hudi compaction). Returns the number of buckets compacted.
-        The read-side collapse does the heavy lifting; this just persists
-        its result as the new base."""
+        deletes / Hudi compaction) in buckets holding >= ``min_files``.
+        Returns the number of buckets compacted; the read-side fold does
+        the heavy lifting."""
         return self._rewrite_buckets(
             [
                 int(b)
                 for b, rels in self._manifest.get("deltas", {}).items()
-                if rels and (buckets is None or int(b) in buckets)
+                if rels and len(rels) >= min_files
             ]
         )
 

@@ -27,12 +27,11 @@ class JdbcOffsetStore:
     tracker (container/.../runner/production/ProductionSourceOffsetTracker
     .java:59-85 stores {entity: offset} in the pipeline's offset.json).
 
-    Same checkpoint-dir JSON pattern as the streaming watermark
-    (streaming/pipeline.py _save_watermark): atomic replace, survives
-    restart. The polling loop is: read tables with the stored offsets,
-    process, then ``advance(table, new_max)`` after the batch COMMITS —
-    advancing before commit would drop rows on a crash (at-least-once is
-    the floor; the lake's commit keys upgrade it to exactly-once)."""
+    A checkpoint-dir JSON file, atomically replaced, survives restart.
+    The polling loop is: read tables with the stored offsets, process,
+    then ``advance(table, new_max)`` after the batch COMMITS — advancing
+    before commit would drop rows on a crash (at-least-once is the floor;
+    the lake's commit keys upgrade it to exactly-once)."""
 
     def __init__(self, checkpoint_dir: str):
         self.checkpoint_dir = checkpoint_dir

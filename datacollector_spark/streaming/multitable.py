@@ -34,7 +34,9 @@ class MultiTableCdcPipeline(CdcIngestPipeline):
     "project": Callable[[DataFrame], DataFrame] | None, **kwargs}} —
     ``project`` lifts the generic payload into that table's typed columns
     (e.g. changelog_formats.project_transcript_payload); None keeps the
-    batch columns as-is. The other keys are that table's
+    batch columns as-is. The router adds a ``_source_file`` column; a
+    ``project`` that keeps it names the table's source files in its lineage
+    row. The other keys are that table's
     :class:`CdcIngestPipeline` keyword arguments (``transforms``,
     ``lineage_dir``, ``data_rules``, ``expire_keep``, ``merge_mode``, ...).
 
@@ -72,7 +74,9 @@ class MultiTableCdcPipeline(CdcIngestPipeline):
             self.pipelines[name] = pipe
 
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.persist()
+        # a cached row has no input file: name it before the persist, for
+        # the tables' lineage ``files``
+        batch = batch_df.withColumn("_source_file", F.input_file_name()).persist()
         try:
             for name, pipe in self.pipelines.items():
                 sl = batch.where(F.col("src_table") == name)

@@ -59,6 +59,8 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("rows_lww_skipped", T.LongType()),
         T.StructField("buckets_touched", T.LongType()),
         T.StructField("max_lsn", T.LongType()),
+        # the latest commit_ts the batch applied, in epoch microseconds
+        T.StructField("max_commit_ts", T.LongType()),
         T.StructField("evolved_columns", T.ArrayType(T.StringType())),
         # what the merge took in per bucket (offsets applied per partition)
         T.StructField(
@@ -128,6 +130,12 @@ class DataRule:
     sampling_pct: float = 1.0
     window_batches: int = 1
 
+    def __post_init__(self):
+        if not 0 < self.sampling_pct <= 1:
+            raise ValueError(f"sampling_pct must be in (0, 1], got {self.sampling_pct}")
+        if self.window_batches < 1:
+            raise ValueError(f"window_batches must be >= 1, got {self.window_batches}")
+
 
 class CdcIngestPipeline:
     """Tail a changelog directory of parquet 'binlog segments' and apply it
@@ -152,6 +160,16 @@ class CdcIngestPipeline:
         dedup_within: str | None = None,
         dedup_fields: list[str] | None = None,
     ):
+        # bad arguments fail here, not in the stream's first batch
+        if merge_mode not in ("cow", "mor"):
+            raise ValueError(f"merge_mode must be 'cow' or 'mor', got {merge_mode!r}")
+        for name, n in (("expire_keep", expire_keep), ("mor_compact_every", mor_compact_every)):
+            if n is not None and n < 1:
+                raise ValueError(f"{name} must be >= 1, got {n}")
+        if late_limit_s is not None and late_limit_s < 0:
+            raise ValueError(f"late_limit_s must be >= 0, got {late_limit_s}")
+        if late_dir and late_limit_s is None:
+            raise ValueError("late_dir needs late_limit_s")
         self.spark = spark
         self.source_dir = source_dir
         self.table = table
@@ -164,8 +182,12 @@ class CdcIngestPipeline:
         self.on_batch_applied = None  # test hook (fault injection)
         # Late-record policy (HDFS target timeDriver + lateRecordsLimit,
         # hdfs-protolib/.../HdfsTargetConfigBean.java:213,339-395): events
-        # whose commit_ts lags the batch high-water mark by more than the
-        # limit are split to a side output instead of merged.
+        # whose commit_ts lags the stream's high-water mark by more than the
+        # limit are split to a side output instead of merged. The mark is
+        # the latest commit_ts of the rows the stream applied (the collapse
+        # winners), committed in the table manifest with the data; it is
+        # the latest commit_ts seen whenever commit_ts does not decrease as
+        # (lsn, seq_in_tx) increases, as in binlog commit order.
         self.late_limit_s = late_limit_s
         self.late_dir = late_dir
         # Data rules (container/.../config/DataRuleDefinition.java:28-66 +
@@ -177,14 +199,15 @@ class CdcIngestPipeline:
         from collections import deque
 
         self._rule_windows: list = [
-            deque(maxlen=max(r.window_batches, 1)) for r in self.data_rules
+            deque(maxlen=r.window_batches) for r in self.data_rules
         ]
         # auto-expire old snapshots every batch (COW storage hygiene); keep
         # enough versions for the exactly-once replay window
         self.expire_keep = expire_keep
-        # merge_mode='mor': append-only ingest (merge-on-read deltas), with
-        # automatic delta compaction every `mor_compact_every` batches —
-        # the 10^10-scale ingest shape (see LakeTable.merge docstring)
+        # merge_mode='mor': append-only ingest (merge-on-read deltas); after
+        # each merge, every bucket holding `mor_compact_every` pending delta
+        # files is compacted. The count is read from the table, so the
+        # cadence survives a restart (see LakeTable.merge docstring).
         self.merge_mode = merge_mode
         self.mor_compact_every = mor_compact_every
         # Streaming dedup window (DeDupProcessor.java:122-143's time window):
@@ -205,34 +228,6 @@ class CdcIngestPipeline:
         self.stream_id = hashlib.sha1(
             checkpoint_dir.rstrip("/").encode()
         ).hexdigest()[:12]
-        # The late-record high-water mark is durable: real Structured
-        # Streaming watermarks are checkpointed, so ours lives next to the
-        # checkpoint and is restored on restart — otherwise a restart would
-        # silently merge arbitrarily late records.
-        self._watermark = self._load_watermark()
-
-    # --------------------------------------------------- watermark durability
-    def _watermark_path(self) -> str:
-        return os.path.join(self.checkpoint_dir, "dcs_watermark.json")
-
-    def _load_watermark(self):
-        import datetime as _dt
-
-        try:
-            with open(self._watermark_path()) as f:
-                raw = json.load(f)["watermark"]
-            return _dt.datetime.fromisoformat(raw)
-        except (OSError, KeyError, ValueError):
-            return None
-
-    def _save_watermark(self) -> None:
-        if self._watermark is None:
-            return
-        os.makedirs(self.checkpoint_dir, exist_ok=True)
-        tmp = self._watermark_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"watermark": self._watermark.isoformat()}, f)
-        os.replace(tmp, self._watermark_path())
 
     # ------------------------------------------------------------ plumbing
     def _read_stream(self) -> DataFrame:
@@ -299,19 +294,19 @@ class CdcIngestPipeline:
 
         df = batch_df
 
-        # ---- observer: data rules, event-time high-water mark and source
-        # files, one CollectMetrics node evaluated inside the collapse job
-        # (no extra pass; only attached when a feature needs it)
+        # ---- observer: data rules and source files, one CollectMetrics node
+        # evaluated inside the collapse job (no extra pass; only attached
+        # when a feature needs it)
         obs = None
-        if self.data_rules or self.late_limit_s is not None or self.lineage_dir:
+        if self.data_rules or self.lineage_dir:
             from pyspark.sql import Observation
 
             # input_file_name is nondeterministic — illegal directly inside
-            # CollectMetrics; project it, aggregate the column
-            df = df.withColumn("_source_file", F.input_file_name())
+            # CollectMetrics; project it, aggregate the column. A batch
+            # sliced from a cache (multi-table) arrives with the column.
+            if "_source_file" not in df.columns:
+                df = df.withColumn("_source_file", F.input_file_name())
             metrics = [F.collect_set("_source_file").alias("_files")]
-            if self.late_limit_s is not None:
-                metrics.append(F.max("commit_ts").alias("_max_ts"))
             sampled = any(r.sampling_pct < 1.0 for r in self.data_rules)
             if sampled:
                 # rand() is nondeterministic — illegal directly inside
@@ -325,23 +320,24 @@ class CdcIngestPipeline:
                     F.sum(F.when(cond, 1).otherwise(0)).alias(f"_rule_{i}")
                 )
             obs = Observation(f"rules-{batch_id}")
-            df = df.observe(obs, *metrics).drop("_source_file")
-            if sampled:
-                df = df.drop("_sample_u")
+            df = df.observe(obs, *metrics)
+        df = df.drop("_source_file", "_sample_u")
 
         # ---- late-record policy: Structured-Streaming watermark semantics
-        # (threshold = max event time seen in PRIOR batches minus limit);
-        # late rows go to the side output, on-time rows continue
-        watermark = self._watermark
-        if self.late_limit_s is not None and watermark is not None:
-            late = df.where(F.col("commit_ts") < F.lit(watermark))
+        # (threshold = the latest commit_ts of PRIOR batches minus limit, as
+        # committed in the table); late rows go to the side output, on-time
+        # rows continue
+        max_ts = self.table.max_commit_ts(commit_key)
+        if self.late_limit_s is not None and max_ts is not None:
+            watermark = F.timestamp_micros(F.lit(max_ts - int(self.late_limit_s * 1e6)))
+            late = df.where(F.col("commit_ts") < watermark)
             if self.late_dir:
                 # one partition per batch, overwritten: a batch replayed
                 # after a crash before its commit lands its late rows once
                 part = f"commit_key={quote(commit_key, safe='')}"
                 late.write.mode("overwrite").parquet(os.path.join(self.late_dir, part))
             df = df.where(
-                F.col("commit_ts").isNull() | (F.col("commit_ts") >= F.lit(watermark))
+                F.col("commit_ts").isNull() | (F.col("commit_ts") >= watermark)
             )
 
         payload_cols = [
@@ -352,11 +348,13 @@ class CdcIngestPipeline:
         # collapse per (_bucket, keys) — the same groups as per keys, since
         # the bucket is a function of the keys — so the collapse window
         # plans no exchange of its own, and merge() reuses the partitioning
-        # for its cache, stats, fold and write.
+        # for its cache, stats, fold and write. commit_ts rides along for
+        # the merge's commit-time high-water mark.
+        envelope = ["op", "lsn"] + (["commit_ts"] if "commit_ts" in df.columns else [])
         collapsed = lww_collapse(
             self.table.partition_by_bucket(df),
             key_columns=[_BUCKET_COL, *keys],
-            carry_columns=["op", "lsn"] + [c for c in payload_cols if c not in keys],
+            carry_columns=envelope + [c for c in payload_cols if c not in keys],
         )
         # Transform AFTER collapse: per-record transforms (mask/normalize)
         # are row-pure and never touch keys/op/lsn, so they commute with
@@ -370,25 +368,13 @@ class CdcIngestPipeline:
         # per-bucket source stats from its bucket-discovery job — the
         # per-partition lineage (offsets applied per bucket) costs no extra job
         res = self.table.merge(collapsed, commit_key=commit_key, mode=self.merge_mode)
-        if (
-            self.merge_mode == "mor"
-            and self.mor_compact_every
-            and (self.batches_applied + 1) % self.mor_compact_every == 0
-        ):
-            self.table.compact_deltas()
+        if self.merge_mode == "mor" and self.mor_compact_every:
+            self.table.compact_deltas(min_files=self.mor_compact_every)
 
         files: list[str] = []
         alerts: list[dict] = []
         if obs is not None:
             m = obs.get
-            max_ts = m.get("_max_ts")
-            if self.late_limit_s is not None and max_ts is not None:
-                import datetime as _dt
-
-                cand = max_ts - _dt.timedelta(seconds=self.late_limit_s)
-                prev = self._watermark
-                self._watermark = max(prev, cand) if prev else cand
-                self._save_watermark()
             for i, rule in enumerate(self.data_rules):
                 n = int(m.get(f"_rule_{i}") or 0)
                 self._rule_windows[i].append(n)
@@ -404,7 +390,6 @@ class CdcIngestPipeline:
                             "sampling_pct": rule.sampling_pct,
                         }
                     )
-            # a batch read from a cache (a multi-table slice) has no file
             files = sorted(f for f in m["_files"] if f)
 
         self._record(batch_id, res, t0, files, alerts)

@@ -28,6 +28,14 @@ def positive_int(text: str) -> int:
     return n
 
 
+def non_negative_float(text: str) -> float:
+    """argparse type for limits: rejects values below 0 at parse time."""
+    x = float(text)
+    if x < 0:
+        raise argparse.ArgumentTypeError(f"must be >= 0, got {x}")
+    return x
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--segments", required=True)
@@ -40,15 +48,22 @@ def main() -> None:
     ap.add_argument("--continuous", action="store_true")
     ap.add_argument("--trigger-interval", default="10 seconds")
     # production knobs (see CdcIngestPipeline): merge-on-read ingest with
-    # periodic compaction, snapshot expiry, late-record policy,
+    # delta compaction, snapshot expiry, late-record policy,
     # cross-batch streaming dedup window
     ap.add_argument("--merge-mode", choices=["cow", "mor"], default="cow")
-    ap.add_argument("--mor-compact-every", type=positive_int, default=None)
+    ap.add_argument(
+        "--mor-compact-every",
+        type=positive_int,
+        default=None,
+        help="compact each bucket once it holds this many delta files",
+    )
     ap.add_argument("--expire-keep", type=positive_int, default=None)
-    ap.add_argument("--late-limit-s", type=float, default=None)
+    ap.add_argument("--late-limit-s", type=non_negative_float, default=None)
     ap.add_argument("--late-dir", default=None)
     ap.add_argument("--dedup-within", default=None, metavar="'10 minutes'")
     args = ap.parse_args()
+    if args.late_dir and args.late_limit_s is None:
+        ap.error("--late-dir needs --late-limit-s")
     # each micro-batch's lineage record, as one JSON log line
     logging.basicConfig(format="%(message)s")
     logging.getLogger("datacollector_spark").setLevel(logging.INFO)

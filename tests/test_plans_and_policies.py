@@ -90,7 +90,8 @@ def test_late_records_split_and_rules(spark, tmp_path):
         ts = t0 + dt.timedelta(seconds=ts_off)
         return (1, lsn, 0, ts, conv, turn, "user", text, None, ts)
 
-    # batch 1 establishes the watermark; batch 2 has one very-late event
+    # batch 1 commits the watermark (t0+1000-3600) with its data; batch 2,
+    # in a restarted pipeline, has one very-late event
     b1 = [row(1, 0, turn=0), row(2, 1000, turn=1)]
     b2 = [row(3, 1010, turn=2), row(4, -5000, turn=3, text="too-late")]
     src = str(tmp_path / "seg")
@@ -125,7 +126,6 @@ def test_late_records_split_and_rules(spark, tmp_path):
         max_files_per_trigger=1,
         lineage_dir=str(tmp_path / "lineage"),
     )
-    pipe2._watermark = t0 + dt.timedelta(seconds=1000 - 3600)
     pipe2.run_available_now(timeout_s=120)
 
     final = table.refresh().read().toPandas()
@@ -189,6 +189,98 @@ def test_late_rows_land_once_across_a_failed_merge(spark, tmp_path):
     assert [r["text"] for r in late] == ["too-late"]
     # the late output is partitioned by the commit key of its batch
     assert late[0]["commit_key"] == f"{pipe.stream_id}:microbatch-1"
+
+
+def test_late_threshold_survives_crash_after_commit(spark, tmp_path):
+    """A crash after a batch's commit and before its checkpoint advances
+    replays the batch as a no-op; the late-record threshold committed with
+    it still holds, so a later row older than it goes to late_dir, as in an
+    uncrashed run."""
+
+    def row(lsn, ts_off, turn, text="x"):
+        ts = dt.datetime(2025, 1, 1, 12, 0, 0) + dt.timedelta(seconds=ts_off)
+        return (1, lsn, 0, ts, "c1", turn, "user", text, None, ts)
+
+    src = str(tmp_path / "seg")
+    b1 = _mk_changelog_df(spark, [row(1, 0, 0), row(2, 1000, 1)])
+    b1.coalesce(1).write.mode("append").parquet(src)
+
+    def mk(name):
+        path = str(tmp_path / name)
+        if not (tmp_path / name).exists():
+            LakeTable.create(spark, path, transcripts_schema(), KEY_COLUMNS, num_buckets=4)
+        return CdcIngestPipeline(
+            spark,
+            src,
+            LakeTable(spark, path),
+            str(tmp_path / f"{name}_ckpt"),
+            source_schema=b1.schema,
+            late_limit_s=3600,
+            late_dir=str(tmp_path / f"{name}_late"),
+            max_files_per_trigger=1,
+        )
+
+    pipe = mk("crashed")
+    merge = pipe.table.merge
+
+    def commit_then_crash(*args, **kwargs):
+        pipe.table.merge = merge
+        merge(*args, **kwargs)
+        raise RuntimeError("injected crash after the commit")
+
+    pipe.table.merge = commit_then_crash
+    with pytest.raises(Exception):
+        pipe.run_available_now(timeout_s=120)
+    assert pipe.table.refresh().version == 1
+    b2 = [row(3, 1010, 2), row(4, -5000, 3, text="too-late")]
+    _mk_changelog_df(spark, b2).coalesce(1).write.mode("append").parquet(src)
+    mk("crashed").run_available_now(timeout_s=120)
+    mk("uncrashed").run_available_now(timeout_s=120)
+
+    def state(name):
+        table = LakeTable(spark, str(tmp_path / name))
+        late = spark.read.parquet(str(tmp_path / f"{name}_late"))
+        return (
+            table.read().orderBy(*KEY_COLUMNS).toPandas(),
+            sorted(r["text"] for r in late.collect()),
+        )
+
+    crashed, uncrashed = state("crashed"), state("uncrashed")
+    assert crashed[1] == uncrashed[1] == ["too-late"]
+    assert crashed[0].equals(uncrashed[0])
+    assert sorted(crashed[0]["turn_idx"]) == [0, 1, 2]
+
+
+@pytest.mark.parametrize(
+    "kwargs",
+    [
+        lambda: {"merge_mode": "merge"},
+        lambda: {"expire_keep": 0},
+        lambda: {"mor_compact_every": 0},
+        lambda: {"late_limit_s": -1.0},
+        lambda: {"late_dir": "late"},
+        lambda: {"data_rules": [DataRule("r", "op = 2", sampling_pct=0.0)]},
+        lambda: {"data_rules": [DataRule("r", "op = 2", sampling_pct=1.5)]},
+        lambda: {"data_rules": [DataRule("r", "op = 2", window_batches=0)]},
+    ],
+    ids=[
+        "merge_mode",
+        "expire_keep",
+        "mor_compact_every",
+        "late_limit_s",
+        "late_dir_without_limit",
+        "sampling_pct_zero",
+        "sampling_pct_above_one",
+        "window_batches",
+    ],
+)
+def test_pipeline_rejects_bad_arguments_at_construction(spark, tmp_path, kwargs):
+    """Bad arguments raise ValueError when the pipeline or its data rule is
+    built, before any stream starts or checkpoint is written."""
+    ckpt = tmp_path / "ckpt"
+    with pytest.raises(ValueError):
+        CdcIngestPipeline(spark, str(tmp_path / "seg"), None, str(ckpt), **kwargs())
+    assert not ckpt.exists()
 
 
 def test_spark_submit_py_files_launch(spark, tmp_path):
@@ -263,33 +355,38 @@ def test_spark_submit_py_files_launch(spark, tmp_path):
 
 def test_run_pipeline_rejects_counts_below_one(tmp_path):
     """--expire-keep 0 (like --buckets, --max-files-per-trigger and
-    --mor-compact-every below 1) is a usage error at parse time: exit 2 with
-    the flag named, before any Spark session starts or a table is created."""
+    --mor-compact-every below 1), --late-limit-s below 0 and --late-dir
+    without --late-limit-s are usage errors at parse time: exit 2 with the
+    flag named, before any Spark session starts or a table is created."""
     import os
     import subprocess
     import sys
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    proc = subprocess.run(
-        [
-            sys.executable,
-            os.path.join(repo, "jobs", "run_pipeline.py"),
-            "--segments",
-            str(tmp_path / "seg"),
-            "--table",
-            str(tmp_path / "table"),
-            "--checkpoint",
-            str(tmp_path / "ckpt"),
-            "--expire-keep",
-            "0",
-        ],
-        capture_output=True,
-        text=True,
-        timeout=120,
-    )
-    assert proc.returncode == 2, proc.stderr[-2000:]
-    assert "--expire-keep" in proc.stderr
-    assert not (tmp_path / "table").exists()
+    for flag, bad in (
+        (["--expire-keep", "0"], "--expire-keep"),
+        (["--late-limit-s", "-1"], "--late-limit-s"),
+        (["--late-dir", str(tmp_path / "late")], "--late-dir"),
+    ):
+        proc = subprocess.run(
+            [
+                sys.executable,
+                os.path.join(repo, "jobs", "run_pipeline.py"),
+                "--segments",
+                str(tmp_path / "seg"),
+                "--table",
+                str(tmp_path / "table"),
+                "--checkpoint",
+                str(tmp_path / "ckpt"),
+                *flag,
+            ],
+            capture_output=True,
+            text=True,
+            timeout=120,
+        )
+        assert proc.returncode == 2, proc.stderr[-2000:]
+        assert bad in proc.stderr
+        assert not (tmp_path / "table").exists()
 
 
 def test_run_mongo_cdc_rejects_bad_counts_at_parse_time(tmp_path):

@@ -1,6 +1,6 @@
 """Round-2 correctness fixes: widening readability, packed cross-batch
-order, bounded manifest, LSN budget guard, oplog key extraction, durable
-watermark, streaming dedup window, df-capped Jaccard."""
+order, bounded manifest, LSN budget guard, oplog key extraction, committed
+late-record watermark, streaming dedup window, df-capped Jaccard."""
 
 from __future__ import annotations
 
@@ -249,23 +249,45 @@ def test_mongo_update_key_from_o2(spark):
 
 
 def test_watermark_persists_across_restart(spark, tmp_path):
+    """The late-record high-water mark is committed in the table manifest
+    with the batch: after a restart, a fresh pipeline on a fresh table
+    handle restores it and splits a row older than its threshold to
+    late_dir."""
     from datacollector_spark.streaming import CdcIngestPipeline
 
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(ckpt)
-    table = LakeTable.create(
-        spark, str(tmp_path / "t"), transcripts_schema(), KEY_COLUMNS, num_buckets=2
+    path = str(tmp_path / "t")
+    late_dir = str(tmp_path / "late")
+    LakeTable.create(spark, path, transcripts_schema(), KEY_COLUMNS, num_buckets=2)
+    ddl = (
+        "op int, lsn long, seq_in_tx int, commit_ts timestamp, conv_id string, "
+        "turn_idx int, text string"
     )
-    p1 = CdcIngestPipeline(
-        spark, str(tmp_path / "seg"), table, ckpt, late_limit_s=60.0
+    t0 = datetime.datetime(2025, 5, 1, 10, 30, 0)
+
+    def restart():
+        return CdcIngestPipeline(
+            spark,
+            str(tmp_path / "seg"),
+            LakeTable(spark, path),
+            str(tmp_path / "ckpt"),
+            late_limit_s=60.0,
+            late_dir=late_dir,
+        )
+
+    batch0 = spark.createDataFrame([(1, 1, 0, t0, "c1", 0, "on-time")], ddl)
+    restart().apply_batch(batch0, 0)
+    p2 = restart()
+    t0_us = batch0.select(F.unix_micros("commit_ts")).first()[0]
+    assert p2.table.max_commit_ts(f"{p2.stream_id}:microbatch-1") == t0_us
+    too_old = t0 - datetime.timedelta(seconds=61)
+    p2.apply_batch(
+        spark.createDataFrame(
+            [(1, 2, 0, too_old, "c1", 1, "late"), (1, 3, 0, t0, "c1", 2, "on-time")], ddl
+        ),
+        1,
     )
-    assert p1._watermark is None
-    p1._watermark = datetime.datetime(2025, 5, 1, 10, 30, 0)
-    p1._save_watermark()
-    p2 = CdcIngestPipeline(
-        spark, str(tmp_path / "seg"), table, ckpt, late_limit_s=60.0
-    )
-    assert p2._watermark == p1._watermark  # restored from the checkpoint dir
+    assert sorted(r["text"] for r in p2.table.read().collect()) == ["on-time"] * 2
+    assert [r["text"] for r in spark.read.parquet(late_dir).collect()] == ["late"]
 
 
 def test_streaming_dedup_within_watermark(spark, tmp_path):

@@ -228,11 +228,13 @@ def test_multitable_cdc_routes_and_merges(spark, tmp_path):
         spark, str(tmp_path / "m"), m_schema, ["metric_id"], num_buckets=2
     )
 
+    # projections drop the other table's columns; the router's
+    # _source_file column passes through
     def proj_t(df):
-        return df.select("op", "lsn", "seq_in_tx", "conv_id", "turn_idx", "text")
+        return df.drop("src_table", "metric_id", "value")
 
     def proj_m(df):
-        return df.select("op", "lsn", "seq_in_tx", "metric_id", "value")
+        return df.drop("src_table", "conv_id", "turn_idx", "text")
 
     lineage = str(tmp_path / "lineage")
 
@@ -271,3 +273,6 @@ def test_multitable_cdc_routes_and_merges(spark, tmp_path):
     rows = spark.read.parquet(lineage).collect()
     assert [r["rows_source"] for r in rows] == [1]
     assert all(f"{sid}:transcripts:microbatch-" in r["commit_key"] for r in rows)
+    # ... and name the segment file the batch was read from
+    (seg_file,) = [f for f in os.listdir(seg) if f.endswith(".parquet")]
+    assert [[os.path.basename(f) for f in r["files"]] for r in rows] == [[seg_file]]

@@ -75,6 +75,11 @@ def test_available_now_drain_matches_oracle(spark, seg_data, tmp_path):
         assert sum(b["rows_source"] for b in r["bucket_stats"]) == r["rows_source"] > 0
     applied = [os.path.basename(f) for r in rows if not r["noop"] for f in r["files"]]
     assert sorted(applied) == sorted(f for f in os.listdir(src) if f.endswith(".parquet"))
+    # max_commit_ts: the batch's latest commit_ts, in epoch microseconds
+    for r in rows:
+        if not r["noop"]:
+            batch = spark.read.parquet(*r["files"])
+            assert r["max_commit_ts"] == batch.select(F.unix_micros(F.max("commit_ts"))).first()[0]
 
 
 def test_batch_record_logged_as_json(spark, tmp_path, caplog):
@@ -303,6 +308,46 @@ def test_kill_restart_exactly_once_mor(spark, seg_data, tmp_path):
     table.compact_deltas()
     assert table.delta_file_count() == 0
     assert_frame_equal(_final(table), oracle, check_dtype=False)
+
+
+def test_mor_compaction_cadence_survives_restart(spark, seg_data, tmp_path):
+    """MOR compaction is triggered by the delta files the table holds, not
+    by a per-process batch counter: a stream that crashes after batch 0
+    commits and restarts still compacts every bucket that reaches
+    mor_compact_every delta files, after every batch it applies."""
+    src, oracle, _ = seg_data
+    table = LakeTable.create(
+        spark, str(tmp_path / "t"), transcripts_schema(), KEY_COLUMNS, num_buckets=8
+    )
+    ckpt = str(tmp_path / "ckpt")
+    most_deltas = []
+
+    def watch(pipe, batch_id):
+        most_deltas.append(max(pipe.table.delta_file_count([b]) for b in range(8)))
+        if len(most_deltas) == 1:
+            raise _Boom("injected crash after batch 0 commits")
+
+    def mk():
+        pipe = CdcIngestPipeline(
+            spark,
+            src,
+            LakeTable(spark, table.path),
+            ckpt,
+            max_files_per_trigger=3,
+            merge_mode="mor",
+            mor_compact_every=2,
+        )
+        pipe.on_batch_applied = watch
+        return pipe
+
+    with pytest.raises(Exception):
+        mk().run_available_now(timeout_s=300)
+    pipe = mk()
+    pipe.run_available_now(timeout_s=300)
+    assert pipe.batches_applied == 3  # batch 0 replayed as a no-op
+    # one entry per applied batch, crashed batch 0 included
+    assert len(most_deltas) == 4 and max(most_deltas) < 2, most_deltas
+    assert_frame_equal(_final(table.refresh()), oracle, check_dtype=False)
 
 
 def test_apply_batch_job_count_and_one_file_per_bucket(spark, seg_data, tmp_path):
