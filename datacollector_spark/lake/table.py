@@ -101,12 +101,13 @@ def _split_commit_key(key: str) -> tuple[str, int] | None:
     """'ns:microbatch-17' -> ('ns:microbatch', 17); None otherwise.
 
     Restricted to the INTERNAL streaming key shape ('<stream>:microbatch-N',
-    used by CdcIngestPipeline and MultiTableCdcPipeline, which commit batch
-    ids in order): merge() is a public API, and a batch caller committing
-    arbitrary numeric-tailed keys out of order ('backfill-10' then
-    'backfill-5') must not have the later merge silently skipped as a replay
-    by the high-water mark. User keys get exact-match replay protection via
-    the bounded ring only."""
+    written only by CdcIngestPipeline.apply_batch — for a stream, for each
+    table of MultiTableCdcPipeline, and as '<commit_key>:microbatch-0' for a
+    PipelineSpec lake sink — which commits batch ids in order): merge() is
+    a public API, and a batch caller committing arbitrary numeric-tailed
+    keys out of order ('backfill-10' then 'backfill-5') must not have the
+    later merge silently skipped as a replay by the high-water mark. User
+    keys get exact-match replay protection via the bounded ring only."""
     head, sep, tail = key.rpartition("-")
     if sep and tail.isdigit() and head.endswith(":microbatch"):
         return head, int(tail)
@@ -440,7 +441,6 @@ class LakeTable:
         self,
         source: DataFrame,
         commit_key: str | None = None,
-        evolve: bool = True,
         mode: str = "cow",
     ) -> MergeResult:
         """Apply a COLLAPSED change batch (one row per key, with `op` and
@@ -459,10 +459,11 @@ class LakeTable:
         shape — the ingest mode for 10^10-event scale, where rewriting the
         table per micro-batch is the bottleneck.
 
-        The caller collapses first (operators.collapse.lww_collapse); the
-        cross-batch LWW guard (s.lsn > t._lsn) is the fold's order, applied
-        at write time in COW mode and at read time in MOR mode, where every
-        batch row counts as an insert or a delete.
+        The caller collapses first: CdcIngestPipeline.apply_batch, the
+        engine's one apply path, runs operators.collapse.lww_collapse by the
+        table's keys. The cross-batch LWW guard (s.lsn > t._lsn) is the
+        fold's order, applied at write time in COW mode and at read time in
+        MOR mode, where every batch row counts as an insert or a delete.
         """
         if mode not in ("cow", "mor"):
             raise ValueError(f"merge mode must be 'cow' or 'mor', got {mode!r}")
@@ -478,12 +479,10 @@ class LakeTable:
         if commit_key is not None and self.committed(commit_key):
             return MergeResult(self.version, commit_key, mode, noop=True)
 
-        schema, evolved = self.schema, []
-        if evolve:
-            payload_schema = T.StructType(
-                [source.schema[c] for c in payload_columns_of(source.schema)]
-            )
-            schema, evolved = self.evolve_schema(payload_schema)
+        payload_schema = T.StructType(
+            [source.schema[c] for c in payload_columns_of(source.schema)]
+        )
+        schema, evolved = self.evolve_schema(payload_schema)
 
         keys = self.key_columns
         meta = (LSN_COLUMN, DELETED_COLUMN)

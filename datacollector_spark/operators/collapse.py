@@ -58,14 +58,9 @@ def packed_order(lsn: Column, seq: Column) -> Column:
     )
 
 
-def _packed_order(lsn_col: str, seq_col: str) -> Column:
-    return packed_order(F.col(lsn_col), F.col(seq_col))
-
-
 def lww_collapse(
     df: DataFrame,
     key_columns: list[str] | None = None,
-    order_columns: tuple[str, str] = ("lsn", "seq_in_tx"),
     carry_columns: list[str] | None = None,
 ) -> DataFrame:
     """Collapse to one row per key: the row with the max (lsn, seq_in_tx).
@@ -75,14 +70,13 @@ def lww_collapse(
     """
     keys = key_columns or KEY_COLUMNS
     carries = carry_columns or [c for c in df.columns if c not in keys]
-    lsn_col, seq_col = order_columns
-    for oc in (lsn_col, seq_col):
+    for oc in ("lsn", "seq_in_tx"):
         if oc not in carries:
             carries = carries + [oc]
 
     w = Window.partitionBy(*keys).orderBy(F.col("_pk").desc())
     return (
-        df.withColumn("_pk", _packed_order(lsn_col, seq_col))
+        df.withColumn("_pk", packed_order(F.col("lsn"), F.col("seq_in_tx")))
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .select(*keys, *carries)

@@ -77,7 +77,7 @@ def coerce_types(df: DataFrame, schema: T.StructType) -> DataFrame:
     return df.withColumns(casts)
 
 
-def transcript_transforms(df: DataFrame, mask_text: bool = True) -> DataFrame:
+def transcript_transforms(df: DataFrame) -> DataFrame:
     """The standard per-batch transform chain for the transcripts pipeline:
     role/tool normalization + PII masking, all JVM expressions in ONE
     withColumns projection (a withColumn per stage re-analyzes the whole
@@ -90,7 +90,6 @@ def transcript_transforms(df: DataFrame, mask_text: bool = True) -> DataFrame:
     cols = {
         "role": F.coalesce(F.create_map(*pairs)[role_clean], role_clean),
         "tool": F.when(tool_clean == "", F.lit(None)).otherwise(tool_clean),
+        "text": mask_pii(F.col("text")),
     }
-    if mask_text:
-        cols["text"] = mask_pii(F.col("text"))
     return df.withColumns(cols)

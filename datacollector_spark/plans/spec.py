@@ -31,7 +31,6 @@ validation issue codes.
 
 from __future__ import annotations
 
-import dataclasses
 import json
 import re
 from typing import Any
@@ -165,7 +164,7 @@ def _connector_writer(typ: str, st: dict, src: Any):
 
             from datacollector_spark.lake.table import LakeTable
             from datacollector_spark.model import payload_columns_of
-            from datacollector_spark.operators.collapse import lww_collapse
+            from datacollector_spark.streaming.pipeline import CdcIngestPipeline
 
             df = src
             for fld, col in (st.get("renames") or {}).items():
@@ -182,25 +181,30 @@ def _connector_writer(typ: str, st: dict, src: Any):
             if "seq_in_tx" not in df.columns:
                 df = df.withColumn("seq_in_tx", F.lit(0))
             keys = list(st["key_columns"])
-            collapsed = lww_collapse(df, key_columns=keys)
             path = st["table_path"]
             spark_s = src.sparkSession
             if not _os.path.exists(_os.path.join(path, "_manifests")):
-                payload = payload_columns_of(collapsed.schema)
+                payload = payload_columns_of(df.schema)
                 LakeTable.create(
                     spark_s,
                     path,
-                    collapsed.select(*payload).schema,
+                    df.select(*payload).schema,
                     keys,
                     num_buckets=int(st.get("num_buckets", 16)),
                 )
             table = LakeTable(spark_s, path)
-            res = table.merge(
-                collapsed,
-                commit_key=st.get("commit_key"),
-                mode="mor" if typ == "kudu_lake" else st.get("mode", "cow"),
-            )
-            return dataclasses.asdict(res)
+            # the batch is collapsed and folded by the table's keys
+            if set(keys) != set(table.key_columns):
+                raise ValueError(
+                    f"{st['name']}: stage key_columns {keys} differ from the "
+                    f"key columns {table.key_columns} of the table at {path}"
+                )
+            # the stream's apply path for one batch (no stream runs); a
+            # re-run replays '<commit_key>:microbatch-0' and applies nothing
+            mode = "mor" if typ == "kudu_lake" else st.get("mode", "cow")
+            pipe = CdcIngestPipeline(spark_s, None, table, path, merge_mode=mode)
+            pipe.stream_id = st.get("commit_key") or st["name"]
+            return pipe.apply_batch(df, 0)
     elif typ == "mongodb_target":
         def write():
             from datacollector_spark.sources.mongodb import (
@@ -475,6 +479,16 @@ class PipelineSpec:
                         raise ValidationError(
                             f"VALIDATION_0003: {name}: {typ} needs {key!r}"
                         )
+                if typ == "jdbc_producer_lake" and st.get("mode", "cow") not in ("cow", "mor"):
+                    raise ValidationError(
+                        f"VALIDATION_0003: {name}: mode must be 'cow' or 'mor', "
+                        f"got {st['mode']!r}"
+                    )
+                if typ in ("jdbc_producer_lake", "kudu_lake") and int(st.get("num_buckets", 16)) < 1:
+                    raise ValidationError(
+                        f"VALIDATION_0003: {name}: num_buckets must be >= 1, "
+                        f"got {st['num_buckets']!r}"
+                    )
             elif typ == "kafka_encode_target":
                 if "topic" not in st:
                     raise ValidationError(
@@ -2519,7 +2533,6 @@ class PipelineSpec:
                             path_to_column(m["field"]): m["columnName"]
                             for m in mappings
                         },
-                        "commit_key": ov.get("commit_key", name),
                         **{
                             k: v
                             for k, v in ov.items()

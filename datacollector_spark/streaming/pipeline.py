@@ -158,7 +158,6 @@ class CdcIngestPipeline:
         merge_mode: str = "cow",
         mor_compact_every: int | None = None,
         dedup_within: str | None = None,
-        dedup_fields: list[str] | None = None,
     ):
         # bad arguments fail here, not in the stream's first batch
         if merge_mode not in ("cow", "mor"):
@@ -219,7 +218,6 @@ class CdcIngestPipeline:
         # In-batch duplicates are collapsed by lww_collapse regardless; the
         # LSN guard at the table catches anything beyond the window.
         self.dedup_within = dedup_within
-        self.dedup_fields = dedup_fields or ["lsn", "seq_in_tx"]
         # Commit keys are namespaced by the checkpoint identity: stable
         # across RESTARTS of the same stream (exactly-once replay dedupe),
         # distinct across DIFFERENT streams into the same table.
@@ -237,17 +235,17 @@ class CdcIngestPipeline:
         df = reader.parquet(self.source_dir)
         if self.dedup_within is not None:
             df = df.withWatermark("commit_ts", self.dedup_within)
-            df = df.dropDuplicatesWithinWatermark(self.dedup_fields)
+            df = df.dropDuplicatesWithinWatermark(["lsn", "seq_in_tx"])
         return df
 
     def _record(
         self, batch_id: int, res: MergeResult, t0: float, files=(), alerts=()
-    ) -> None:
-        """Write the batch's one record: the merge's fields plus the batch
-        id, wall time, source files and rule firings. It is logged as one
-        JSON line at INFO and, with ``lineage_dir``, appended as one parquet
-        file (lineage is observability: table correctness never depends on
-        it)."""
+    ) -> dict:
+        """Write and return the batch's one record: the merge's fields plus
+        the batch id, wall time, source files and rule firings. It is logged
+        as one JSON line at INFO and, with ``lineage_dir``, appended as one
+        parquet file (lineage is observability: table correctness never
+        depends on it)."""
         row = {
             "batch_id": batch_id,
             **dataclasses.asdict(res),
@@ -257,7 +255,7 @@ class CdcIngestPipeline:
         }
         _log.info(json.dumps(row))
         if not self.lineage_dir:
-            return
+            return row
         # Driver-direct parquet append (pyarrow), not a Spark job: the record
         # is one metadata row per batch, but createDataFrame + a 1-task write
         # job costs seconds of job-scheduling/committer overhead per write
@@ -278,19 +276,23 @@ class CdcIngestPipeline:
         tmp = os.path.join(self.lineage_dir, "." + name + ".tmp")
         pq.write_table(table, tmp, compression="snappy")
         os.replace(tmp, os.path.join(self.lineage_dir, name))
+        return row
 
     # ----------------------------------------------------------- the batch
-    def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """One micro-batch: transform -> collapse -> merge. Public so batch
-        (non-streaming) backfills can reuse the identical code path."""
+    def apply_batch(self, batch_df: DataFrame, batch_id: int) -> dict:
+        """One micro-batch: transform -> collapse -> merge; returns the
+        batch's record (the lineage row). The engine's only path from a
+        change batch to a table commit: the stream's foreachBatch body, each
+        table of the multi-table router, and the entry point for batch
+        backfills and the PipelineSpec lake sinks (``jdbc_producer_lake``,
+        ``kudu_lake``), which apply their frame as batch 0."""
         t0 = time.time()
         commit_key = f"{self.stream_id}:microbatch-{batch_id}"
         if self.table.committed(commit_key):
             # replayed after a crash that hit AFTER table commit but BEFORE
             # the checkpoint advanced — the exactly-once window
             res = MergeResult(self.table.version, commit_key, self.merge_mode, noop=True)
-            self._record(batch_id, res, t0)
-            return
+            return self._record(batch_id, res, t0)
 
         df = batch_df
 
@@ -392,18 +394,21 @@ class CdcIngestPipeline:
                     )
             files = sorted(f for f in m["_files"] if f)
 
-        self._record(batch_id, res, t0, files, alerts)
+        row = self._record(batch_id, res, t0, files, alerts)
         if self.expire_keep is not None and not res.noop:
             self.table.expire_snapshots(keep_last=self.expire_keep)
         self.batches_applied += 1
         if self.on_batch_applied is not None:
             self.on_batch_applied(self, batch_id)
+        return row
 
     # -------------------------------------------------------------- drivers
     def run_available_now(self, timeout_s: float | None = None) -> None:
         """Drain everything currently in the source, then stop — SDC's
         'reset to end of data' bounded run; Trigger.AvailableNow still honors
-        maxFilesPerTrigger, so the drain is a sequence of micro-batches."""
+        maxFilesPerTrigger, so the drain is a sequence of micro-batches.
+        Raises ``TimeoutError``, with the query stopped, when the drain is
+        still running after ``timeout_s``."""
         q = (
             self._read_stream()
             .writeStream.foreachBatch(self.apply_batch)
@@ -411,7 +416,11 @@ class CdcIngestPipeline:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(timeout_s) if timeout_s else q.awaitTermination()
+        if not timeout_s:
+            q.awaitTermination()
+        elif not q.awaitTermination(timeout_s):
+            q.stop()
+            raise TimeoutError(f"available-now drain still running after {timeout_s} s")
 
     def run_continuous(self, processing_time: str = "5 seconds"):
         """Tail indefinitely (the production mode). Returns the query."""

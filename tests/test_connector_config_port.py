@@ -12,6 +12,7 @@ import pytest
 
 from datacollector_spark.plans.spec import PipelineSpec, ValidationError
 from datacollector_spark.sources.sdcipc import SdcIpcOrigin
+from datacollector_spark.streaming.pipeline import LINEAGE_SCHEMA
 from tests.test_cassandra_sink import FakeCassandra
 from tests.test_kinesis_origin import ACCESS as KACCESS
 from tests.test_kinesis_origin import SECRET as KSECRET
@@ -395,27 +396,84 @@ def test_jdbc_and_kudu_targets_port_to_lake_merge(spark, tmp_path):
     )
     spec.build(spark)
     meters = spec.run_targets()
-    assert meters["Jdbc_01"]["rows_inserted"] >= 0  # MergeResult dict shape
+    # a sink reports its batch's lineage record, as a stream batch does
+    for name, mode in (("Jdbc_01", "cow"), ("Kudu_01", "mor")):
+        assert list(meters[name]) == LINEAGE_SCHEMA.fieldNames()
+        assert meters[name]["batch_id"] == 0 and meters[name]["noop"] is False
+        assert meters[name]["commit_key"] == f"{name}:microbatch-0"
+        assert meters[name]["mode"] == mode
 
-    for path in (jdbc_path, kudu_path):
-        got = (
-            LakeTable(spark, path)
-            .read()
-            .select("conv_id", "turn_idx", "text")
-            .toPandas()
-            .sort_values(["conv_id", "turn_idx"])
-            .reset_index(drop=True)
-        )
-        exp = (
-            expected[["conv_id", "turn_idx", "text"]]
-            .sort_values(["conv_id", "turn_idx"])
-            .reset_index(drop=True)
-        )
-        assert got.equals(exp), f"final state mismatch for {path}"
+    def assert_tables_match_oracle():
+        for path in (jdbc_path, kudu_path):
+            got = (
+                LakeTable(spark, path)
+                .read()
+                .select("conv_id", "turn_idx", "text")
+                .toPandas()
+                .sort_values(["conv_id", "turn_idx"])
+                .reset_index(drop=True)
+            )
+            exp = (
+                expected[["conv_id", "turn_idx", "text"]]
+                .sort_values(["conv_id", "turn_idx"])
+                .reset_index(drop=True)
+            )
+            assert got.equals(exp), f"final state mismatch for {path}"
 
+    assert_tables_match_oracle()
     # idempotent re-apply: the commit key no-ops the second run
     meters2 = spec.run_targets()
-    assert meters2["Jdbc_01"].get("noop") or meters2["Jdbc_01"]["rows_inserted"] == 0
+    assert meters2["Jdbc_01"]["noop"] is True and meters2["Kudu_01"]["noop"] is True
+    assert_tables_match_oracle()
+
+
+@pytest.mark.parametrize(
+    "typ, bad",
+    [
+        ("jdbc_producer_lake", {"mode": "upsert"}),
+        ("jdbc_producer_lake", {"num_buckets": 0}),
+        ("kudu_lake", {"num_buckets": 0}),
+    ],
+)
+def test_lake_sink_config_rejected_at_validate(typ, bad):
+    """A lake sink's merge mode and bucket count are checked when the spec
+    is validated, before any plan is built or table created."""
+    stages = [
+        {"name": "src", "type": "parquet_origin", "path": "in", "out": "main"},
+        {"name": "sink", "type": typ, "in": "main", "table_path": "t",
+         "key_columns": ["conv_id"], **bad},
+    ]
+    with pytest.raises(ValidationError, match=f"sink: {next(iter(bad))}"):
+        PipelineSpec({"pipeline": "p", "stages": stages})
+
+
+def test_lake_sink_rejects_keys_other_than_the_tables(spark, tmp_path):
+    """A sink whose key_columns disagree with the existing table's raises
+    before it writes: the batch is collapsed and folded by the table's
+    keys, so the stage's keys would otherwise be silently ignored."""
+    from datacollector_spark.lake.table import LakeTable
+    from datacollector_spark.model import transcripts_schema
+
+    path = str(tmp_path / "lake")
+    table = LakeTable.create(spark, path, transcripts_schema(), ["conv_id", "turn_idx"], num_buckets=4)
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [("c1", 0, "a"), ("c1", 1, "b")], "conv_id string, turn_idx int, text string"
+    ).write.parquet(src)
+    spec = PipelineSpec(
+        {
+            "pipeline": "p",
+            "stages": [
+                {"name": "src", "type": "parquet_origin", "path": src, "out": "main"},
+                {"name": "sink", "type": "jdbc_producer_lake", "in": "main",
+                 "table_path": path, "key_columns": ["conv_id"]},
+            ],
+        }
+    )
+    spec.build(spark)
+    with pytest.raises(ValueError, match=r"\['conv_id'\].*\['conv_id', 'turn_idx'\]"):
+        spec.run_targets()
+    assert table.refresh().version == 0
 
 
 def test_kafka_target_port_encodes_with_partition_expression(spark):

@@ -82,6 +82,22 @@ def test_available_now_drain_matches_oracle(spark, seg_data, tmp_path):
             assert r["max_commit_ts"] == batch.select(F.unix_micros(F.max("commit_ts"))).first()[0]
 
 
+def test_available_now_timeout_stops_the_query(spark, seg_data, tmp_path):
+    """A drain still running at ``timeout_s`` raises, and its query is
+    stopped rather than left running behind the returned call."""
+    src, _, _ = seg_data
+    table = LakeTable.create(
+        spark, str(tmp_path / "t"), transcripts_schema(), KEY_COLUMNS, num_buckets=4
+    )
+    pipe = CdcIngestPipeline(
+        spark, src, table, str(tmp_path / "ckpt"), max_files_per_trigger=3
+    )
+    before = {q.id for q in spark.streams.active}  # other tests' queries
+    with pytest.raises(TimeoutError):
+        pipe.run_available_now(timeout_s=0.001)
+    assert {q.id for q in spark.streams.active} <= before
+
+
 def test_batch_record_logged_as_json(spark, tmp_path, caplog):
     """Each micro-batch, a replay included, logs its record as one JSON
     line at INFO — the same fields the lineage table stores."""
